@@ -84,8 +84,7 @@ object Scaling {
   /** The job under measurement, selected by SPARK_GRAFT_JOB:
     *  - "rule" (default): pages scan → html→text (native expression) →
     *    mapPartitions mention/link/pair/classify kernel → count (the
-    *    north_star extraction shape; row-identical to the declarative
-    *    fused path, FusedSpec);
+    *    north_star extraction shape, `Stages.extractTriplesKernel`);
     *  - "injected": the same front end feeding the ZERO-SHUFFLE fused
     *    knowledge-injection kernel (broadcast-KB entity knowledge +
     *    96-class decode) — the complete KIRE-shaped pipeline;

@@ -180,16 +180,15 @@ object SparkEntry {
     }),
     "q_mentions" -> ((s, dir) => {
       val pages = Pages.fromDocuments(s, dir)
-      Stages.mentions(pages, s)
+      Stages.mentionsKernel(pages, s)
         .groupBy(col("doc_id"), col("alias"))
         .agg(count(lit(1)).as("n_mentions"), min(col("pos_start")).as("first_pos"),
           sum(col("pos_end") - col("pos_start") + 1).as("n_span_tokens"))
         .orderBy(col("doc_id"), col("alias"))
     }),
     "q_linked" -> ((s, dir) => {
-      // production (kernel) mention path; the relational-vote showcase
-      // stays spec-pinned row-identical to linkedFast in FusedSpec, and
-      // q_mentions keeps the declarative-HOF path under the oracle
+      // kernel mentions + the pre-resolved dictionary; the oracle replays
+      // the per-(doc, alias) relational vote independently
       val pages = Pages.fromDocuments(s, dir)
       Stages.linkedFast(Stages.mentionsKernel(pages, s), s)
         .groupBy(col("doc_id"), col("alias"), col("qid"), col("ner_type"))
@@ -197,8 +196,7 @@ object SparkEntry {
         .orderBy(col("doc_id"), col("alias"))
     }),
     "q_pairs" -> ((s, dir) => {
-      // production (kernel) mention path — linkedFast ≡ the relational vote
-      // (FusedSpec); q_linked keeps the staged-vote showcase
+      // kernel mentions + pre-resolved linking (q_linked checks the vote)
       val pages = Pages.fromDocuments(s, dir)
       val linked = Stages.linkedFast(Stages.mentionsKernel(pages, s), s)
       Stages.pairs(linked)
@@ -208,15 +206,14 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
     "q_triples" -> ((s, dir) => {
-      // fused single-shuffle declarative path; staged-path equivalence is
-      // pinned by FusedSpec and both share this oracle
+      // the mapPartitions extraction kernel — the one pages → triples path
       val pages = Pages.fromDocuments(s, dir)
-      Stages.extractTriplesFused(pages, s)
+      Stages.extractTriplesKernel(pages, s)
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
     }),
     "q_triples_kernel" -> ((s, dir) => {
-      // the mapPartitions production kernel (north_star execution model) —
-      // same oracle as q_triples, independently verified
+      // the mapPartitions production kernel (north_star execution model)
+      // under its own oracle entry
       val pages = Pages.fromDocuments(s, dir)
       Stages.extractTriplesKernel(pages, s)
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
@@ -317,8 +314,7 @@ object SparkEntry {
       // the ZERO-SHUFFLE fused scoring kernel (pages → mentions → link →
       // pair features → 96-class decode in one mapPartitions pass); with
       // fixture weights its decode is provably identical to the rule path,
-      // so it shares q_triples' oracle. The staged twin
-      // (pairFeatures + score) is pinned row-identical in FusedSpec.
+      // so it shares q_triples' oracle.
       pipeline.RelationScorer.extractKernelFused(Pages.fromDocuments(s, dir), s)
         .select("doc_id", "subj", "pred", "obj").distinct()
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
@@ -327,9 +323,7 @@ object SparkEntry {
       // the knowledge-injection path (KIRE's core): KG edges/neighborhood,
       // entity attributes, and coref statistics fused into the 96-relation
       // decode — KB evidence flips decodes the rule table alone cannot make.
-      // ZERO-SHUFFLE fused kernel (broadcast KB maps); the staged
-      // enrichment-join path is pinned row-identical in InjectionSpec and
-      // remains the plan-inspectable twin
+      // ZERO-SHUFFLE fused kernel (broadcast KB maps)
       pipeline.KnowledgeInjection.extractInjectedFused(Pages.fromDocuments(s, dir), s)
         .select("doc_id", "subj", "pred", "obj", "score_milli")
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
@@ -357,11 +351,11 @@ object SparkEntry {
       // the derived pages table (scan + wrap + extract) — one derivation
       val pages = Pages.fromDocuments(s, dir).cache()
       val linked = Stages.linkedFast(Stages.mentionsKernel(pages, s), s).cache()
-      // rule triples from the CACHED linked table (pinned row-identical to
-      // the kernel extraction) — no second pass over the page text
+      // rule triples from the CACHED linked table (same rule as the
+      // kernel extraction, both under q_triples' oracle semantics) — no
+      // second pass over the page text
       val preds = Stages.triples(Stages.pairs(linked), s)
-      // gold from the fused injected kernel (one extra pages pass beats the
-      // staged enrichment joins; row-identity pinned in InjectionSpec)
+      // gold from the fused injected kernel (one extra pages pass)
       val gold = pipeline.KnowledgeInjection.extractInjectedFused(pages, s)
         .select("doc_id", "subj", "pred", "obj").distinct()
       val pairDist = pipeline.RelationScorer.pairFeatures(linked)
@@ -382,8 +376,7 @@ object SparkEntry {
       val pages = Pages.fromDocuments(s, dir).filter(col("doc_id") % 10 === 0)
         .cache()
       val linked = Stages.linkedFast(Stages.mentionsKernel(pages, s), s)
-      // fused injected kernel over the same dev slice (row-identity to the
-      // staged path pinned in InjectionSpec)
+      // fused injected kernel over the same dev slice
       val scoredT = pipeline.KnowledgeInjection.extractInjectedFused(pages, s)
         .select(col("doc_id"), col("subj"), col("pred"), col("obj"),
           col("score_milli").cast("double").as("score"))
@@ -593,8 +586,7 @@ object SparkEntry {
     "q_sentence_vecs" -> ((s, dir) =>
       // A11 sentence-node pooling: per-sentence token-vector sums over the
       // md5-derived deterministic embedding — integer-exact. Kernel path
-      // (one digest per token); the declarative HOF twin is spec-pinned
-      // row-identical in VectorFeaturesSpec
+      // (one digest per token)
       pipeline.VectorFeatures.sentenceVectorsKernel(Pages.fromDocuments(s, dir), s)
         .orderBy(col("doc_id"), col("sent_id"), col("dim"))),
     "q_mention_vecs" -> ((s, dir) => {
@@ -839,9 +831,7 @@ object SparkEntry {
     "q_pagerank" -> ((s, dir) => {
       // entity centrality over the constructed KG (seed/salt/triage lists):
       // fixed-iteration integer-fixed-point PageRank, join+groupBy per step
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       ops.PageRank.run(trips.select(col("subj").as("src"), col("obj").as("dst")))
         .orderBy(col("v"))
@@ -850,9 +840,7 @@ object SparkEntry {
       // deterministic TransE-style embedding training over the extracted
       // KG — sign-gradient synchronous epochs in integer quanta, replayed
       // step-for-step by the DuckDB oracle
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       ops.KgEmbedding.train(trips.select(col("subj").as("h"),
           col("pred").as("r"), col("obj").as("t")), s)
@@ -861,9 +849,7 @@ object SparkEntry {
     "q_kg_nearest" -> ((s, dir) => {
       // the KG-embedding-neighbor feature KIRE injects (kg_data_loader.py):
       // top-k nearest entities in trained L1 embedding space
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       val emb = ops.KgEmbedding.train(trips.select(col("subj").as("h"),
         col("pred").as("r"), col("obj").as("t")), s)
@@ -873,9 +859,7 @@ object SparkEntry {
       // min-hop neighborhood expansion from the graph's root entities
       // (sources that are never targets) — the subgraph-fetch consumers run
       // against the fused KG, generalizing the reference's one-hop context
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       // sever the extraction lineage ONCE: seeds' except and every hop's
       // join otherwise each replay the full extraction
@@ -888,9 +872,7 @@ object SparkEntry {
     "q_kg_closure" -> ((s, dir) => {
       // ontology closure of the 'part of' (P361) sub-relation via path
       // doubling — O(log depth) self-joins, fixpoint-checked
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       ops.KgGraph.transitiveClosure(
           trips.filter(col("pred") === ops.KgGraph.HierarchyPred)
@@ -922,9 +904,7 @@ object SparkEntry {
       // bounded per-triple provenance: the EvidenceCap smallest supporting
       // doc ids per distinct triple (deterministic function of the support
       // SET; a viral triple costs a cap-sized buffer, never a collect_list)
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       pipeline.KgFusion.evidence(trips.select("doc_id", "subj", "pred", "obj"))
         .orderBy(col("subj"), col("pred"), col("obj"))
@@ -932,9 +912,7 @@ object SparkEntry {
     "q_kg_degree" -> ((s, dir) => {
       // hub/skew census of the constructed KG: per-entity degrees, log2
       // histogram bucket, and the hot flag that seeds the salted joins
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
       ops.KgGraph.degreeProfile(
           trips.select(col("subj").as("src"), col("obj").as("dst")))
@@ -944,9 +922,7 @@ object SparkEntry {
       // cross-document entity canonicalization: KB sameAs cliques (P460)
       // collapse to their min qid and the extracted KG is remapped —
       // the corpus-level half of the north_star union-find canonicalize
-      // kernel front-end (row-identical to the fused HOF form, FusedSpec):
-      // the KG stage reads the extraction output, it does not re-showcase
-      // the interpreted-HOF path that q_triples/q_mentions deliberately pin
+      // kernel front-end: the KG stage reads the extraction output
       val trips = Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s)
         .select("subj", "pred", "obj").distinct()
       val sameAs = pipeline.Enrich.kgTriples(s).filter(col("r") === ops.KgGraph.SameAsPred)
@@ -973,12 +949,12 @@ object SparkEntry {
   /** Shared DuckDB CTE prefix reproducing the pipeline stages relationally.
     * Generated from the same Gazetteer constants as the Spark side.
     *
-    * Sentence rule (mirrors Stages.sentences): a token ending in [.!?;]
-    * closes a segment; segments are subdivided into SentenceChunk-token
-    * chunks; sent_id = dense rank of (seg, chunk) per doc. Mention rule
-    * (mirrors Stages.sentenceMentions): all L-token windows (L ∈ alias
-    * lengths) inside one sentence matching the dictionary, minus matches
-    * strictly contained in a longer match. */
+    * Sentence rule (mirrors Stages.docSentenceSpans): a token ending in
+    * [.!?;] closes a segment; segments are subdivided into
+    * SentenceChunk-token chunks; sent_id = dense rank of (seg, chunk) per
+    * doc. Mention rule (mirrors Stages.docMentions): all L-token windows
+    * (L ∈ alias lengths) inside one sentence matching the dictionary, minus
+    * matches strictly contained in a longer match. */
   /** Tokenization + sentence CTE chain (norm_docs → sents), shared by the
     * Gazetteer-dict and file-dict oracle variants. */
   private def sentCtes: String = s"""

@@ -150,7 +150,8 @@ object DocRED {
     * precondition (title is the document key in DocRED/DWIE — same-title
     * rows with different content are corpus corruption upstream of us).
     * The distinct() absorbs exact re-ingestions of a document, which would
-    * otherwise violate `extractTriplesKernel`'s unique-doc_id precondition;
+    * otherwise violate the extraction kernels' unique-doc_id precondition
+    * (a duplicated row emits every triple twice — FusedSpec);
     * a 64-bit hash collision between distinct titles remains a ~2⁻⁶⁴
     * residual per pair. */
   def asPages(docs: DataFrame): DataFrame =

@@ -62,7 +62,7 @@ object Gazetteer {
   )
 
   /** Distinct alias token lengths — drives the sliding-window widths of the
-    * mention matcher in BOTH engines. */
+    * oracle's mention matcher (the kernel probes by first token instead). */
   def aliasLens: Seq[Int] = aliases.map(_._1.split(" ").length).distinct.sorted
 
   /** qid → NER type over the REAL 6-type DocRED vocabulary

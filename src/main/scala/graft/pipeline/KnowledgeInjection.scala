@@ -2,15 +2,15 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.kb.Gazetteer
 
 /** The knowledge-injection layer: KG structure (one-hop edges + shared
   * neighborhood), entity attributes, and coref statistics FUSED into the
-  * relation classifier's features — the relational re-expression of KIRE's
-  * core thesis (`ATLOP+KIRE/knowledge_injection_layer/aggregation.py:6-127`
-  * fuses KG-attribute/KG-structure/coref encodings into the pair
-  * representation; adjacency from `kg_data_loader.py:125-153`, attr encoder
+  * relation classifier's features — one mapPartitions kernel
+  * (`extractInjectedFused`) re-expressing KIRE's core thesis
+  * (`ATLOP+KIRE/knowledge_injection_layer/aggregation.py:6-127` fuses
+  * KG-attribute/KG-structure/coref encodings into the pair representation;
+  * adjacency from `kg_data_loader.py:125-153`, attr encoder
   * `kg_encoder.py:68-116`, coref distillation `coref_triple_enc.py:8-88`).
   *
   * All feature weights are INTEGER milli-logits, so the adaptive-threshold
@@ -38,7 +38,9 @@ import graft.kb.Gazetteer
   * `ATLOP+KIRE/losses.py:32-42`): a co-occurring pair with ≥4 distinct
   * KB-suggested relations (each +4500 > the rule's +2000 base margin)
   * evicts its rule triple from the top-4 — reference-faithful, and pinned
-  * explicitly (kernel ≡ relational twin) in InjectionSpec's eviction case.
+  * explicitly in InjectionSpec's eviction case. InjectionSpec also pins
+  * each feature's weight with exact milli-logits on one-doc pages, and the
+  * q_injected_triples oracle replays the decode over the whole corpus.
   */
 object KnowledgeInjection {
 
@@ -77,151 +79,17 @@ object KnowledgeInjection {
                              shared_nbrs: Int, h_coref: Int, t_coref: Int,
                              same_inst: Int)
 
-  // public: Spark's generated (de)serializer code lives outside this
-  // package and cannot touch private members
-  case class EntKnow(doc_id: Long, qid: String, ner_type: String,
-                     sents: Seq[Int], coref: Int, instance_of: String,
-                     nbrs: Seq[String])
-
-  case class PairKnow(doc_id: Long, h_qid: String, h_type: String,
-                      t_qid: String, t_type: String,
-                      min_sent_dist: Int, n_cooc: Long,
-                      evidence: Seq[Int], h_coref: Int, t_coref: Int,
-                      h_inst: String, t_inst: String, shared_nbrs: Int)
-
   case class InjScoredTriple(doc_id: Long, subj: String, pred: String,
                              obj: String, score_milli: Long, evidence: Seq[Int])
 
-  /** Per-(doc, entity) coref statistic distilled from the coref OPERATOR's
-    * output (not recomputed from raw mentions): the entity-keyed per-mention
-    * partner count (≤ 8 by the W1 cap) — positions of ALL the entity's
-    * aliases pair, per `gen_coref_data.py:148-188`, so the statistic is
-    * min(total entity mentions − 1, 8). */
-  def corefCounts(linked: DataFrame): DataFrame = {
-    val perMention = Coref.entityCoref(linked)
-      .groupBy(col("doc_id"), col("qid"), col("p1"))
-      .agg(count(lit(1)).as("k"))
-    val perEntity = perMention.groupBy(col("doc_id"), col("qid"))
-      .agg(max(col("k")).as("k"))
-    linked.select(col("doc_id"), col("qid")).distinct()
-      .join(perEntity, Seq("doc_id", "qid"), "left")
-      .select(col("doc_id"), col("qid"),
-        coalesce(col("k"), lit(0L)).cast("int").as("coref"))
-  }
-
-  /** Per-(doc, entity) one-hop neighbor sets from undirected edge rows
-    * `(doc_id, a, b)`, BOUNDED at the [[MaxNbrSet]] smallest neighbors —
-    * a map-side-combinable aggregation whose partial buffers never exceed
-    * MaxNbrSet elements even for a 10⁷-degree hub (see
-    * [[graft.functions.BoundedMinSet]]). Result arrays arrive sorted. */
-  def boundedNbrSets(und: DataFrame): DataFrame = {
-    val bounded = udaf(new graft.functions.BoundedMinSet(MaxNbrSet))
-    und.groupBy(col("doc_id"), col("a").as("qid"))
-      .agg(bounded(col("b")).as("nbrs"))
-  }
-
-  /** Pair features + injected knowledge. Derivation is genuine dataflow from
-    * the enrichment operators: direct-edge / shared-neighbor features come
-    * from `Enrich.oneHop`'s output, the attribute feature from
-    * `Enrich.attributes`, the coref feature from `Coref.entityCoref`.
-    *
-    * Join shape (the 100× consideration): ENTITY-level knowledge (coref
-    * partner counts, instance-of, one-hop neighbor sets) attaches before
-    * pair formation — k rows per doc, not the k² pair blowup — and rides
-    * into the per-doc flatMapGroups pair kernel, which computes shared
-    * neighbors as a set intersection in-row. The ONLY pair-level join left
-    * is the direct-edge attach, so the big pair table is shuffled for
-    * exactly ONE feature join. */
-  def injectedFeatures(linked: DataFrame, spark: SparkSession): DataFrame = {
-    // (b) + (c): entity-level features
-    val inst = Enrich.attributes(linked, spark).select(col("qid"), col("instance_of"))
-    val coref = corefCounts(linked)
-
-    // (a) KG structure from the one-hop subgraph. Direct edges stay a
-    // pair-level join; shared neighbors are computed IN the pair kernel
-    // from per-entity neighbor sets (k entity rows carry their one-hop
-    // neighborhood; |N(h) ∩ N(t) \ {h,t}| per pair) — no und ⋈ und
-    // self-join, no pair-level aggregation for the neighbor feature.
-    val hop = Enrich.oneHop(linked, spark)
-    val rel2rel = typedLit(Gazetteer.kbRel2rel.toMap)
-    val direct = hop.select(col("doc_id"), col("h").as("h_qid"), col("t").as("t_qid"),
-        element_at(rel2rel, col("r")).as("sr"))
-      .filter(col("sr").isNotNull)
-      .groupBy("doc_id", "h_qid", "t_qid")
-      .agg(array_sort(collect_set(col("sr"))).as("sugg_rels"))
-    val und = hop.select(col("doc_id"), col("h").as("a"), col("t").as("b"))
-      .union(hop.select(col("doc_id"), col("t").as("a"), col("h").as("b")))
-      .distinct()
-    val nbrSets = boundedNbrSets(und)
-
-    // entity aggregation (the pairFeatures shape) with knowledge columns
-    // attached at ENTITY level — k rows per doc, not the k² pair blowup —
-    // then per-doc pair formation + feature arithmetic in a flatMapGroups
-    // kernel (plain Scala; the interpreted-HOF explode this replaces was
-    // the dominant cost of the feature derivation)
-    import spark.implicits._
-    val entKnow = linked.groupBy(col("doc_id"), col("qid"), col("ner_type"))
-      .agg(collect_list(col("sent_id")).as("sents"))
-      .join(coref, Seq("doc_id", "qid"), "left")
-      .join(broadcast(inst), Seq("qid"))
-      .join(nbrSets, Seq("doc_id", "qid"), "left")
-      .select(col("doc_id"), col("qid"), col("ner_type"), col("sents"),
-        coalesce(col("coref"), lit(0)).as("coref"), col("instance_of"),
-        coalesce(col("nbrs"), array()).as("nbrs"))
-      .as[EntKnow]
-    val pairs = entKnow.groupByKey(_.doc_id).flatMapGroups { (docId, it) =>
-      val arr = it.toArray
-      // per-entity sets hoisted out of the k² pair loop (k conversions, not k²)
-      val sentSets = arr.map(_.sents.toSet)
-      val nbrSets2 = arr.map(_.nbrs.toSet)
-      val out = scala.collection.mutable.ArrayBuffer.empty[PairKnow]
-      var i = 0
-      while (i < arr.length) {
-        val h = arr(i)
-        var j = 0
-        while (j < arr.length) {
-          if (i != j && arr(j).qid != h.qid) {
-            val t = arr(j)
-            val (msd, cooc) = RelationScorer.pairDistCooc(h.sents, t.sents)
-            val ev = RelationScorer.evidenceOf(sentSets(i), sentSets(j))
-            val (sm, bg) = if (nbrSets2(i).size <= nbrSets2(j).size)
-              (nbrSets2(i), nbrSets2(j)) else (nbrSets2(j), nbrSets2(i))
-            var shared = 0
-            sm.foreach(z =>
-              if (z != h.qid && z != t.qid && bg.contains(z)) shared += 1)
-            out += PairKnow(docId, h.qid, h.ner_type, t.qid, t.ner_type,
-              msd, cooc, ev, h.coref, t.coref, h.instance_of, t.instance_of,
-              shared)
-          }
-          j += 1
-        }
-        i += 1
-      }
-      out.iterator
-    }.toDF()
-
-    pairs
-      .join(direct, Seq("doc_id", "h_qid", "t_qid"), "left")
-      .select(col("doc_id"), col("h_qid"), col("h_type"), col("t_qid"), col("t_type"),
-        col("min_sent_dist"), col("n_cooc"), col("evidence"),
-        coalesce(col("sugg_rels"), array()).as("sugg_rels"),
-        col("shared_nbrs"),
-        col("h_coref"), col("t_coref"),
-        (col("h_inst") === col("t_inst")).cast("int").as("same_inst"))
-      // admission: textual co-occurrence OR a direct KB edge (the long-range
-      // case) — see the reach model in the scaladoc
-      .filter(col("n_cooc") >= 1 || size(col("sugg_rels")) > 0)
-  }
-
-  /** Compiled integer weight tables, shared by the staged kernel and the
-    * fused kernel: one base array per (hType, tType) aligned with the
-    * relation vocabulary — the 96-class loop is a flat integer array walk,
-    * not 96 tuple-keyed map probes per pair. */
-  private[pipeline] case class CompiledInj(rels: Array[String],
+  /** Compiled integer weight tables: one base array per (hType, tType)
+    * aligned with the relation vocabulary — the 96-class loop is a flat
+    * integer array walk, not 96 tuple-keyed map probes per pair. */
+  private[graft] case class CompiledInj(rels: Array[String],
       relIdx: Map[String, Int], base: Map[(String, String), Array[Long]],
       default: Array[Long], ruleIdx: Map[(String, String), Array[Int]])
 
-  private[pipeline] def compileInj(): CompiledInj = {
+  private[graft] def compileInj(): CompiledInj = {
     val relsArr = RelationScorer.relations.toArray
     val ruleSet = Gazetteer.relRules.toSet
     val types = graft.kb.DocREDVocab.nerTypes
@@ -238,8 +106,7 @@ object KnowledgeInjection {
   private val EmptyIdx = Array.empty[Int]
 
   /** The 96-class injected decode for one pair (soft features + direct-edge
-    * bonus + adaptive threshold + top-4 cap) — one code path for both
-    * kernels.
+    * bonus + adaptive threshold + top-4 cap).
     *
     * CANDIDATE PRUNING (exact, not approximate): a relation can clear the
     * adaptive threshold only through a +WBase rule base (requires n_cooc
@@ -248,7 +115,7 @@ object KnowledgeInjection {
     * capped weight design (pinned in InjectionSpec "weight design"). So the
     * decode walks ruleIdx ∪ suggIdx (typically ≤ 3 entries) instead of all
     * 96 classes, emitting exactly the same triples. */
-  private[pipeline] def decodeInjectedPair(cw: CompiledInj, p: InjectedFeature)
+  private[graft] def decodeInjectedPair(cw: CompiledInj, p: InjectedFeature)
       : Seq[InjScoredTriple] = {
     val soft = (WDist * RelationScorer.disBucket(p.min_sent_dist) +
       WCoocUnit * math.min(p.n_cooc, CoocCap.toLong).toInt +
@@ -262,10 +129,9 @@ object KnowledgeInjection {
             else cw.default
     val ruleIs = if (coocOk) cw.ruleIdx.getOrElse((p.h_type, p.t_type), EmptyIdx)
                  else EmptyIdx
-    // distinct: the upstream builders emit set-valued sugg_rels, but this
-    // is a public decode over arbitrary features frames — a duplicated
-    // suggestion must not emit twice nor burn top-4 slots (the old
-    // Set-based walk was idempotent)
+    // distinct: the kernel emits set-valued sugg_rels, but a hand-built
+    // feature row may not — a duplicated suggestion must not emit twice
+    // nor burn top-4 slots
     val suggIs = if (p.sugg_rels.isEmpty) EmptyIdx
                  else p.sugg_rels.iterator.flatMap(cw.relIdx.get).toArray.distinct
     // single-candidate fast path (one rule relation, no suggestion — the
@@ -300,69 +166,23 @@ object KnowledgeInjection {
       .toSeq
   }
 
-  /** The mapPartitions inference kernel over injected features: 96 integer
-    * milli-logits per pair, adaptive-threshold decode. Broadcast: the
-    * compiled type-pair weight tables. */
-  def scoreInjected(features: DataFrame, spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    val bw = spark.sparkContext.broadcast(compileInj())
-    features.as[InjectedFeature].mapPartitions { it =>
-      val cw = bw.value
-      it.flatMap(decodeInjectedPair(cw, _))
-    }.toDF()
-  }
-
-  /** Declarative twin of `scoreInjected` — identical decode expressed as
-    * explode + literal-map lookups + window top-4. Pinned row-identical to
-    * the kernel in InjectionSpec; kept for plan inspection, not production. */
-  def scoreInjectedRelational(features: DataFrame): DataFrame = {
-    val relsArr = typedLit(RelationScorer.relations)
-    val ruleMap = typedLit(
-      Gazetteer.relRules.map(r => (r._1 + "|" + r._2 + "|" + r._3) -> 1).toMap)
-    val w = Window.partitionBy("doc_id", "h_qid", "t_qid")
-      .orderBy(col("score_milli").desc, col("pred").asc)
-    features
-      .withColumn("pred", explode(relsArr))
-      .withColumn("score_milli",
-        (when(col("n_cooc") >= 1 && element_at(ruleMap,
-            concat_ws("|", col("h_type"), col("t_type"), col("pred"))).isNotNull,
-            WBase).otherwise(-WBase)
-          + lit(WDist) * RelationScorer.disBucketCol(col("min_sent_dist"))
-          + lit(WCoocUnit) * least(col("n_cooc"), lit(CoocCap.toLong)).cast("int")
-          + when(array_contains(col("sugg_rels"), col("pred")), WDirect).otherwise(0)
-          + lit(WNbrUnit) * least(col("shared_nbrs"), lit(NbrCap))
-          + lit(WCorefUnit) * (least(col("h_coref"), lit(CorefCap))
-            + least(col("t_coref"), lit(CorefCap)))
-          + lit(WAttr) * col("same_inst")).cast("long"))
-      .filter(col("score_milli") > 0)
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= RelationScorer.MaxLabels)
-      .select(col("doc_id"), col("h_qid").as("subj"), col("pred"),
-        col("t_qid").as("obj"), col("score_milli"), col("evidence"))
-  }
-
-  /** Full injected path: linked mentions → enriched features → kernel. */
-  def extractInjected(linked: DataFrame, spark: SparkSession): DataFrame =
-    scoreInjected(injectedFeatures(linked, spark), spark)
-
   /** ZERO-SHUFFLE fused injected extraction: pages → mentions → link →
     * entity knowledge → pair features → 96-class injected decode, one
     * mapPartitions pass per document — the injected twin of
-    * `RelationScorer.extractKernelFused`. Row-identical to the staged path
-    * (`extractInjected` over linkedFast mentions, InjectionSpec) and shares
-    * q_injected_triples' oracle; the job's only exchange is the sink's.
+    * `RelationScorer.extractKernelFused`. q_injected_triples checks it
+    * against the oracle; the job's only exchange is the sink's.
     *
-    * The KB rides as THREE broadcast maps built from the SAME constants the
-    * staged path joins relationally: undirected adjacency (one-hop neighbor
-    * sets), the directed suggested-relation map (KB edges ∘ kbRel2rel), and
-    * the instance-of attribute map. Per doc, `Enrich.oneHop`'s visibility
-    * rule (an edge is in the subgraph iff either endpoint is a non-TIME doc
-    * entity) reduces in-kernel to: a non-TIME entity keeps its FULL KB
+    * The KB rides as THREE broadcast maps built from the Gazetteer
+    * constants: undirected adjacency (one-hop neighbor sets), the directed
+    * suggested-relation map (KB edges ∘ kbRel2rel), and the instance-of
+    * attribute map. Per doc, `Enrich.oneHop`'s visibility rule (an edge
+    * is in the subgraph iff either endpoint is a non-TIME doc entity)
+    * reduces in-kernel to: a non-TIME entity keeps its FULL KB
     * neighborhood, a TIME entity only neighbors that are non-TIME doc
     * entities, and a pair sees its direct edges unless BOTH endpoints are
     * TIME. At 10^12 docs the same shape holds with the KB maps swapped from
-    * plan literals to torrent-broadcast variables (the staged sort-merge
-    * path `Enrich.attachAttributesLarge` covers the KB-too-big case).
+    * plan literals to torrent-broadcast variables (the sort-merge path
+    * `Enrich.attachAttributesLarge` covers the KB-too-big case).
     *
     * PRECONDITION (all fused kernels): unique doc_id per input row. */
   def extractInjectedFused(pages: DataFrame, spark: SparkSession): DataFrame = {
@@ -399,8 +219,8 @@ object KnowledgeInjection {
           val sentSets = arr.map(_._2._2.toSet)
           // per-entity knowledge, hoisted out of the k² pair loop; the
           // doc-scoped neighborhood gets the SAME MaxNbrSet smallest-first
-          // bound as the staged boundedNbrSets aggregation (kernel ≡ staged
-          // ≡ oracle for hub entities too)
+          // bound as the oracle (and as `BoundedMinSet` in KgFusion), so
+          // hub entities agree too
           val nbrs = arr.map { case (q, (tpe, _)) =>
             val scoped = {
               val full = adjM.getOrElse(q, Set.empty[String])

@@ -22,8 +22,7 @@ import graft.kb.Gazetteer
   * rule table (`Gazetteer.relRules`): +2 for rule-sanctioned
   * (hType,tType,rel), −2 otherwise, plus sub-unit distance/co-occurrence
   * features that never flip the sign. That identity is the kernel's
-  * correctness gate (kernel path ≡ Catalyst rule path, tested both in
-  * ScalaTest and against the DuckDB oracle).
+  * correctness gate: q_scored_triples shares q_triples' rule-path oracle.
   */
 object RelationScorer {
 
@@ -125,8 +124,7 @@ object RelationScorer {
     * so only the type pair's positive-base indices are walked (typically 1
     * instead of 96). Falls back to the full walk when the guard does not
     * hold (e.g. pathological co-occurrence counts), so the output equals
-    * `decode(cw, base, soft)` for EVERY input — pinned by the kernel↔staged
-    * parity specs and the shared oracles. */
+    * `decode(cw, base, soft)` for EVERY input — pinned in DecodeSpec. */
   private[pipeline] def decodeFast(cw: Compiled, typePair: (String, String),
       base: Array[Double], soft: Double): Seq[(String, Double)] = {
     if (soft >= cw.negGuard) return decode(cw, base, soft)
@@ -143,7 +141,7 @@ object RelationScorer {
     buf.sortBy { case (r, s) => (-s, r) }.take(MaxLabels).toSeq
   }
 
-  /** Shared per-pair sentence statistics — the Scala twin of pairFeatures'
+  /** Shared per-pair sentence statistics — the Scala form of pairFeatures'
     * HOF arithmetic, used by both the fused scorer and the injection pair
     * kernel: (min |a−b|, multiset co-occurrence count). Evidence (the
     * sorted distinct co-occurring sentences) is computed separately via
@@ -245,31 +243,18 @@ object RelationScorer {
     }.toDF()
   }
 
-  /** Full kernel path: linked mentions → features → scored triples.
-    * Co-occurrence gate (n_cooc >= 1) mirrors the relational path's
-    * same-sentence pair generation. `lengthSorted` applies W6
-    * (`B4+KIRE/config/Config.py:287-288`): order work within each partition
-    * by descending feature weight so a batching kernel pads minimally —
-    * a partition-local sort, no shuffle, results unchanged. */
-  def extract(linked: DataFrame, spark: SparkSession,
-              lengthSorted: Boolean = false): DataFrame = {
-    val feats = pairFeatures(linked).filter(col("n_cooc") >= 1)
-    val ordered = if (lengthSorted) feats.sortWithinPartitions(col("n_cooc").desc) else feats
-    score(ordered, spark)
-  }
-
   /** ZERO-SHUFFLE scored extraction: pages → mentions → link → pair
     * features → 96-class decode, all inside one mapPartitions pass per
-    * document (the scored twin of `Stages.extractTriplesKernel`). The
-    * staged path (`extract` over `pairFeatures`) pays two entity-level
-    * shuffles (groupBy doc×qid, groupBy doc) plus the in-row pair explode;
-    * here every step is per-doc driver-free Scala over the same broadcast
-    * dictionary and compiled weights, so the job's only exchange is
-    * whatever the SINK needs. Row-identical to the staged path (FusedSpec)
-    * and shares q_scored_triples' oracle.
+    * document (the scored twin of `Stages.extractTriplesKernel`). Every
+    * step is per-doc driver-free Scala over the same broadcast dictionary
+    * and compiled weights, so the job's only exchange is whatever the SINK
+    * needs. Only pairs that co-occur in a sentence (n_cooc ≥ 1) are scored.
+    * FusedSpec pins it row-identical to `score` over `pairFeatures` (the
+    * relational feature path the eval queries use); q_scored_triples
+    * checks it against the oracle.
     *
     * PRECONDITION (same as `Stages.extractTriplesKernel`): input pages must
-    * have UNIQUE doc_id. The staged path groups mentions ACROSS rows of a
+    * have UNIQUE doc_id. `pairFeatures` groups mentions ACROSS rows of a
     * doc_id, so with duplicate rows it would merge their sentence lists
     * while this kernel processes each row independently — silently
     * different pairs. Callers that cannot guarantee uniqueness must dedup

@@ -1,187 +1,37 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.expressions.Window
 import graft.kb.Gazetteer
 
-/** Relational stages of the triple-extraction pipeline, each a pure
-  * DataFrame → DataFrame function so Catalyst sees one declarative plan
-  * end-to-end (filter pushdown, column pruning, broadcast selection all
-  * apply across stage boundaries).
+/** The triple-extraction stages. Mention detection (`mentionsKernel`) and
+  * the whole pages → triples rule path (`extractTriplesKernel`) are
+  * mapPartitions kernels: sentence split, phrase match, suppression, link
+  * and pair-gen in plain Scala over broadcast dictionaries, one pass per
+  * document. The DuckDB oracle (`SparkEntry.oracleSql`) is the
+  * independent second implementation of every step.
   *
   * Scale notes (100 TB / 10^12 docs):
-  *  - sentence splitting, mention candidate generation, dictionary
-  *    membership, and longest-match suppression are all per-row array HOFs —
-  *    NO shuffle until pair aggregation / the final distinct.
-  *  - the alias dictionary rides in the plan as a literal map (hash lookup
-  *    per candidate). At reference dictionary scale (~63k aliases) that is
-  *    a few MB of plan — still fine; at true Wikidata scale swap the literal
-  *    for a broadcast join on the exploded candidates (the `linked` stage
-  *    already demonstrates that join shape).
-  *  - per-sentence pair generation is done with array HOFs inside the row,
-  *    never a relational self-join, so the n·(n−1) blowup stays inside one
-  *    task and never hits the shuffle.
+  *  - all per-document work stays inside one task — NO shuffle until a
+  *    consumer needs one; the n·(n−1) pair blowup never hits the shuffle.
+  *  - the alias dictionary rides as a broadcast variable keyed by first
+  *    token (63k-alias file-backed dictionaries included), never as a plan
+  *    literal.
+  *  - `pairs`/`triples` keep the relational rule path over a linked-mention
+  *    table for the eval queries that need per-pair statistics.
   */
 object Stages {
-
-  /** Sentence-boundary rule (T7 substitute, replacing GENIA in
-    * `GLRE+KIRE/data_processing/tools.py:246-305`): a token ending in
-    * terminal punctuation closes a sentence; segments longer than
-    * `SentenceChunk` tokens are subdivided (run-on/punctuation-less guard). */
-  val BoundaryRegex = "[.!?;]$"
-
-  /** Flat token stream: one row per token with its global position (used by
-    * vocabulary/statistics consumers; the mention path keeps tokens in-row). */
-  def tokens(pages: DataFrame): DataFrame =
-    pages.select(col("doc_id"), posexplode(split(col("text"), " ")).as(Seq("pos", "tok")))
-
-  /** Sentence table: (doc_id, sent_id, st, en, stoks) where sent_id is dense
-    * 0-based per doc, [st, en] the inclusive global token range, and stoks
-    * the sentence's token slice. Entirely in-row: boundary detection,
-    * segment spans, and chunk subdivision are array HOFs; the posexplode
-    * assigns dense ids without any window or shuffle. */
-  def sentences(pages: DataFrame): DataFrame = {
-    val chunk = Gazetteer.SentenceChunk
-    // abbreviation post-fix (T7): "dr." / "u.s." are not boundaries
-    val abbrevMap = Gazetteer.abbreviations
-      .map(a => s"'${a.replace("'", "''")}', 1").mkString("map(", ", ", ")")
-    // Performance shape: higher-order functions evaluate INTERPRETED, with
-    // no common-subexpression elimination — a lambda body re-evaluates its
-    // captured child expressions on every element. Any array used more than
-    // once (or inside a lambda) is therefore LET-BOUND via the
-    // single-element-transform trick `transform(array(X), x -> body)`,
-    // which evaluates X exactly once per row and binds it as a variable.
-    // Boundary detection compares the last character (no per-token regex).
-    pages
-      .select(col("doc_id"), split(col("text"), " ").as("toks"))
-      .withColumn("spans", expr(s"""
-        element_at(transform(array(
-            filter(sequence(0, size(toks) - 1),
-                   i -> substring(element_at(toks, i + 1), -1, 1) IN ('.', '!', '?', ';')
-                        AND element_at($abbrevMap, lower(element_at(toks, i + 1))) IS NULL)),
-          bidx ->
-            flatten(transform(
-              filter(zip_with(concat(array(0), transform(bidx, b -> b + 1)),
-                              concat(bidx, array(size(toks) - 1)),
-                              (s, e) -> struct(s AS st, e AS en)),
-                     p -> p.st <= p.en),
-              p -> transform(sequence(0, (p.en - p.st) div $chunk),
-                     c -> struct(CAST(p.st + c * $chunk AS INT) AS st,
-                                 CAST(least(p.st + c * $chunk + ${chunk - 1}, p.en) AS INT) AS en))))), 1)"""))
-      .select(col("doc_id"), col("toks"), posexplode(col("spans")).as(Seq("sent_id", "span")))
-      .select(col("doc_id"), col("sent_id").cast("int").as("sent_id"),
-        col("span.st").as("st"), col("span.en").as("en"),
-        expr("slice(toks, span.st + 1, span.en - span.st + 1)").as("stoks"))
-  }
-
-  /** Broadcast alias dictionaries. */
-  def aliasDict(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Gazetteer.aliases.toDF("alias", "qid", "prio")
-  }
-
-  def typeDict(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Gazetteer.entityTypes.toDF("qid", "ner_type")
-  }
 
   def ruleDict(spark: SparkSession): DataFrame = {
     import spark.implicits._
     Gazetteer.relRules.toDF("h_type", "t_type", "pred")
   }
 
-  /** Adds a `ments` column to a sentences() frame: the sentence's maximal
-    * dictionary matches as array<struct<ps, pe, phrase>>.
-    *
-    * Semantics (T9/J8, multi-token `find_position` of
-    * `ATLOP+KIRE/data/gen_coref_data.py:163-169` plus longest-match-wins):
-    *  - a candidate is any L-token window (L ∈ alias lengths) inside one
-    *    sentence whose joined surface form is a dictionary alias — matches
-    *    never cross sentence boundaries;
-    *  - a match strictly contained in a longer match is suppressed
-    *    ("sort merge join" beats its inner "merge join"/"sort"/"join");
-    *    partially-overlapping maximal matches both survive. Containment
-    *    implies same-sentence, so per-sentence suppression is exact per-doc.
-    *
-    * The alias set rides in the plan as a generated map literal; candidate
-    * construction, membership, and suppression run in-row — zero shuffle. */
-  def sentenceMentions(sents: DataFrame): DataFrame = {
-    // SQL map literals generated from the Gazetteer (keys are plain words).
-    def sqlMap(keys: Seq[String]): String =
-      keys.distinct.sorted.map(k => s"'${k.replace("'", "''")}', 1")
-        .mkString("map(", ", ", ")")
-    val aliasSet = sqlMap(Gazetteer.aliases.map(_._1))
-    // L = 1: the candidate phrase IS the token — membership probe only, no
-    // slicing or string building.
-    val single = s"""filter(transform(sequence(0, size(stoks) - 1),
-          i -> struct(CAST(st + i AS INT) AS ps, CAST(st + i AS INT) AS pe,
-                      element_at(stoks, i + 1) AS phrase)),
-        c -> element_at($aliasSet, c.phrase) IS NOT NULL)"""
-    // L >= 2: phrase construction is PRUNED by a first-token probe — the
-    // (slice + concat) work only happens at positions that can start an
-    // L-token alias, which on web text is a tiny fraction of positions.
-    val multi = Gazetteer.aliasLens.filter(_ >= 2).map { l =>
-      val firstToks = Gazetteer.aliases.map(_._1.split(" "))
-        .filter(_.length == l).map(_.head)
-      s"""filter(transform(sequence(0, size(stoks) - 1),
-            i -> IF(element_at(${sqlMap(firstToks)}, element_at(stoks, i + 1)) IS NOT NULL
-                    AND i + $l <= size(stoks),
-                    struct(CAST(st + i AS INT) AS ps, CAST(st + i + ${l - 1} AS INT) AS pe,
-                           concat_ws(' ', slice(stoks, i + 1, $l)) AS phrase),
-                    CAST(NULL AS STRUCT<ps: INT, pe: INT, phrase: STRING>))),
-          c -> c IS NOT NULL AND element_at($aliasSet, c.phrase) IS NOT NULL)"""
-    }
-    val allCands = (single +: multi).mkString("concat(", ", ", ")")
-    // LET-BIND the matched candidates (see sentences() note): the exists()
-    // inside the suppression lambda must scan a bound VALUE — referencing
-    // the expression directly would regenerate every candidate for every
-    // element (k× the whole candidate pipeline, interpreted).
-    val ments = expr(s"""
-      element_at(transform(array($allCands), cs ->
-        filter(cs, c -> NOT exists(cs, o ->
-          o.ps <= c.ps AND o.pe >= c.pe AND o.pe - o.ps > c.pe - c.ps))), 1)""")
-    sents.withColumn("ments", ments)
-  }
-
-  /** Mention detection: span-based multi-token gazetteer matching.
-    * Output: (doc_id, sent_id, pos_start, pos_end, alias). In-row matching
-    * + suppression, then one explode — no joins, no shuffle. */
-  def mentions(pages: DataFrame, spark: SparkSession): DataFrame =
-    sentenceMentions(sentences(pages))
-      .select(col("doc_id"), col("sent_id"), explode(col("ments")).as("m"))
-      .select(col("doc_id"), col("sent_id"),
-        col("m.ps").as("pos_start"), col("m.pe").as("pos_end"),
-        col("m.phrase").as("alias"))
-
-  /** Entity linking: two-tier dictionary probe + deterministic vote
-    * (`ATLOP+KIRE/data/gen_kg_data.py:76-87,272-304`). Vote per
-    * (doc, alias): support = mention count (equal across candidates of one
-    * alias), so the decisive order is (prio asc, qid asc) — mirroring the
-    * reference's explicit-dict-first rule and its stable-sort tie behavior.
-    * All joins broadcast; the groupBy keys on (doc_id, alias) which is
-    * bounded per doc — shuffle 1 (or map-side combinable). */
-  def linked(mentions: DataFrame, spark: SparkSession): DataFrame = {
-    val cands = mentions
-      .join(broadcast(aliasDict(spark)), Seq("alias"), "inner")
-    val w = Window.partitionBy("doc_id", "alias")
-      .orderBy(col("prio").asc, col("qid").asc)
-    val winner = cands
-      .select("doc_id", "alias", "qid", "prio").distinct()
-      .withColumn("rk", row_number().over(w))
-      .filter(col("rk") === 1)
-      .select(col("doc_id"), col("alias"), col("qid"))
-    mentions.join(winner, Seq("doc_id", "alias"))
-      .join(broadcast(typeDict(spark)), Seq("qid"))
-      .select("doc_id", "sent_id", "pos_start", "pos_end", "alias", "qid", "ner_type")
-  }
-
-  /** Fast-path entity linking: the per-doc vote is doc-independent (every
-    * mention of an alias carries the same candidate set — see
-    * resolvedAliases), so linking is ONE broadcast hash join against the
-    * pre-resolved dictionary. Result-identical to `linked` (FusedSpec pins
-    * it); `linked` keeps the reference-shaped relational vote for
-    * inspection and the q_linked oracle. Use THIS in production plans. */
+  /** Entity linking (`ATLOP+KIRE/data/gen_kg_data.py:76-87,272-304`): the
+    * per-doc vote is doc-independent (every mention of an alias carries the
+    * same candidate set — see `resolveAliasEntries`), so linking is ONE
+    * broadcast hash join against the pre-resolved dictionary. The q_linked
+    * oracle replays the per-(doc, alias) relational vote independently. */
   def linkedFast(mentions: DataFrame, spark: SparkSession): DataFrame =
     linkedFastWith(mentions, spark, resolvedAliases)
 
@@ -221,12 +71,6 @@ object Stages {
       .select(col("doc_id"), col("h_qid").as("subj"), col("pred"), col("t_qid").as("obj"))
       .distinct()
 
-  /** End-to-end: pages → triples through the staged relational path. */
-  def extractTriples(pages: DataFrame, spark: SparkSession): DataFrame =
-    triples(pairs(linked(mentions(pages, spark), spark)), spark)
-
-  // ------------------------------------------------------------ fused path
-
   /** Scala-side dictionary resolution over ARBITRARY (alias, qid, prio)
     * entries — the Gazetteer constants and file-backed 63k-alias
     * dictionaries (`sources.DictFiles`) resolve through one rule. The
@@ -235,6 +79,8 @@ object Stages {
     * per-(doc, alias) winner is the global (prio asc, qid asc) winner.
     * Entities outside the type table default to MISC (the reference's
     * dictionary carries no types either — types come from the dataset).
+    * This is the only place the linking vote lives; PipelineSpec pins the
+    * prio and tie rules on it directly.
     *
     * Intra-tier duplicate-label tie-break: min (prio, qid) — a DELIBERATE
     * determinism pin that diverges from the reference ingest
@@ -259,23 +105,11 @@ object Stages {
     }
 
   /** The Gazetteer fixture dictionary, resolved (strict: every qid must
-    * have a type — the q_linked oracle's inner join demands it).
-    * Equivalence with the relational vote is enforced by the shared DuckDB
-    * oracle (q_linked) and FusedSpec. */
+    * have a type — the q_linked oracle's inner join demands it). */
   def resolvedAliases: Seq[(String, String, String)] =
     resolveAliasEntries(Gazetteer.aliases, Gazetteer.entityTypes.toMap,
       strict = true)
 
-  /** mapPartitions production kernel (the north_star's "batched mention
-    * detection per document-partition with pre-broadcast dictionaries"):
-    * sentence split, phrase match, suppression, link, pair-gen, and rule
-    * classification in plain Scala over broadcast dictionaries — one
-    * deserialization per partition, rows streamed, the final global dedup
-    * the ONLY shuffle (same topology as extractTriplesFused, minus the
-    * interpreted-HOF evaluation overhead: real hash maps, no per-element
-    * Catalyst eval). Output identical to extractTriplesFused /
-    * extractTriples — pinned in FusedSpec and by the shared q_triples
-    * oracle semantics. */
   /** Resolved alias entry for the kernels: remaining tokens after the
     * first, full surface, qid, ner type. */
   type DictEntry = (Array[String], String, String, String)
@@ -295,11 +129,15 @@ object Stages {
   def kernelDict: Map[String, Array[DictEntry]] =
     kernelDictFrom(resolvedAliases)
 
-  /** Sentence spans (terminal punctuation + abbreviation guard + chunk cap)
-    * for one token array — the plain-Scala twin of `sentences()`, shared by
-    * `docMentions` and the vector kernels (`VectorFeatures
-    * .sentenceVectorsKernel`). */
-  private[pipeline] def docSentenceSpans(toks: Array[String])
+  /** Sentence spans for one token array — the one sentence splitter, shared
+    * by `docMentions` and the vector kernels (`VectorFeatures
+    * .sentenceVectorsKernel`). Rule (T7 substitute, replacing GENIA in
+    * `GLRE+KIRE/data_processing/tools.py:246-305`): a token ending in
+    * terminal punctuation closes a sentence unless it is an abbreviation
+    * ("dr.", "u.s."); segments longer than `SentenceChunk` tokens are
+    * subdivided (run-on/punctuation-less guard). Returns inclusive global
+    * token ranges (st, en); the index is the dense 0-based sent_id. */
+  private[graft] def docSentenceSpans(toks: Array[String])
       : scala.collection.mutable.ArrayBuffer[(Int, Int)] = {
     val chunk = Gazetteer.SentenceChunk
     val spans = scala.collection.mutable.ArrayBuffer.empty[(Int, Int)]
@@ -311,7 +149,7 @@ object Stages {
           && !(t.length <= maxAbbrevLen &&
                // Locale.ROOT: Spark's lower() and DuckDB's lower() are
                // locale-independent; default-locale toLowerCase would break
-               // kernel==HOF==oracle parity on e.g. tr_TR JVMs ("I"→"ı")
+               // kernel==oracle parity on e.g. tr_TR JVMs ("I"→"ı")
                abbrevSet.contains(t.toLowerCase(java.util.Locale.ROOT)))) {
         var s = segStart
         while (s <= i) { spans += ((s, math.min(s + chunk - 1, i))); s += chunk }
@@ -330,9 +168,18 @@ object Stages {
 
   /** Per-doc plain-Scala matcher shared by the mapPartitions kernels:
     * sentence spans (via `docSentenceSpans`) → per-sentence MAXIMAL
-    * dictionary matches. Emits (sent_id, ps, pe, entry). Same semantics as
-    * sentences() + sentenceMentions() (pinned in FusedSpec / SentenceSpec
-    * via the exploding callers). */
+    * dictionary matches. Emits (sent_id, ps, pe, entry).
+    *
+    * Semantics (T9/J8, multi-token `find_position` of
+    * `ATLOP+KIRE/data/gen_coref_data.py:163-169` plus longest-match-wins):
+    *  - a candidate is any L-token window (L ∈ alias lengths) inside one
+    *    sentence whose joined surface form is a dictionary alias — matches
+    *    never cross sentence boundaries;
+    *  - a match strictly contained in a longer match is suppressed
+    *    ("sort merge join" beats its inner "merge join"/"sort"/"join");
+    *    partially-overlapping maximal matches both survive. Containment
+    *    implies same-sentence, so per-sentence suppression is exact per-doc.
+    * Pinned in SentenceSpec and FusedSpec. */
   private[pipeline] def docMentions(toks: Array[String],
       byFirst: Map[String, Array[DictEntry]])
       : scala.collection.mutable.ArrayBuffer[(Int, Int, Int, DictEntry)] = {
@@ -370,16 +217,18 @@ object Stages {
 
   /** Abbreviation set for the kernel path (checked only on boundary-final
     * tokens — one lowercase allocation per boundary candidate, not per
-    * token). Must stay identical to the HOF path's map literal and the
-    * oracle's NOT IN list — all three derive from Gazetteer.abbreviations. */
+    * token). Must stay identical to the oracle's NOT IN list — both derive
+    * from Gazetteer.abbreviations. */
   private val abbrevSet: Set[String] = Gazetteer.abbreviations.toSet
   // length pre-filter: almost every boundary-final token is a full word
   // longer than any abbreviation — skip its toLowerCase allocation entirely
   private val maxAbbrevLen: Int = abbrevSet.iterator.map(_.length).max
 
-  /** mapPartitions twin of mentions(): (doc_id, sent_id, pos_start,
-    * pos_end, alias) — row-identical (FusedSpec), ~10× cheaper than the
-    * interpreted-HOF path. */
+  /** Mention detection (the north_star's "batched mention detection per
+    * document-partition with pre-broadcast dictionaries"): one row per
+    * maximal match, (doc_id, sent_id, pos_start, pos_end, alias). One
+    * dictionary deserialization per partition, rows streamed, no join and
+    * no shuffle (PipelineSpec pins the plan; q_mentions the rows). */
   def mentionsKernel(pages: DataFrame, spark: SparkSession): DataFrame =
     mentionsKernelWith(pages, spark, kernelDict)
 
@@ -401,18 +250,22 @@ object Stages {
       .toDF("doc_id", "sent_id", "pos_start", "pos_end", "alias")
   }
 
-  /** PRECONDITION: input pages must have UNIQUE doc_id — the per-doc
+  /** Pages → triples in one mapPartitions pass: sentence split, phrase
+    * match, suppression, link, pair-gen and rule classification in plain
+    * Scala over broadcast dictionaries — no join and no shuffle at all
+    * (PipelineSpec pins the plan; q_triples and q_triples_kernel the rows).
+    *
+    * PRECONDITION: input pages must have UNIQUE doc_id — the per-doc
     * LinkedHashSet dedup below makes the output globally distinct only
     * because doc_id is part of the key. With duplicate doc_id rows
-    * (re-ingested doc, replayed partition) this kernel emits duplicate
-    * triples where extractTriplesFused's global distinct() would not;
-    * FusedSpec pins that divergence explicitly. Callers that cannot
-    * guarantee uniqueness must dedup upstream (the runner's per-bucket
-    * overwrite does) or append .distinct(). */
+    * (re-ingested doc, replayed partition) this kernel emits every triple
+    * once per input row; FusedSpec pins that behaviour explicitly. Callers
+    * that cannot guarantee uniqueness must dedup upstream (the runner's
+    * per-bucket overwrite does) or append .distinct(). */
   def extractTriplesKernel(pages: DataFrame, spark: SparkSession): DataFrame =
     extractTriplesKernelWith(pages, spark, kernelDict)
 
-  /** Same fused kernel over an arbitrary broadcast dictionary (the 63k
+  /** Same kernel over an arbitrary broadcast dictionary (the 63k
     * file-backed case: ~6 MB of broadcast, identical zero-shuffle shape). */
   def extractTriplesKernelWith(pages: DataFrame, spark: SparkSession,
       dict: Map[String, Array[DictEntry]]): DataFrame = {
@@ -442,34 +295,5 @@ object Stages {
         }
       }
       .toDF("doc_id", "subj", "pred", "obj")
-  }
-
-  /** Fused pages → triples: all per-document work (sentence split, phrase
-    * match, suppression, link, pair-gen, rule classify) happens in-row via
-    * higher-order functions and two literal maps baked into the plan — the
-    * final global dedup is the ONLY shuffle. This is the 100 TB shape:
-    * shuffle volume is the triple set, not the token stream.
-    *
-    * Output is identical to `extractTriples` (asserted in FusedSpec and by
-    * sharing q_triples' oracle). */
-  def extractTriplesFused(pages: DataFrame, spark: SparkSession): DataFrame = {
-    val aliasMap = typedLit(resolvedAliases.map(r => r._1 -> (r._2 + "|" + r._3)).toMap)
-    val ruleMap = typedLit(Gazetteer.relRules.map(r => (r._1 + "|" + r._2) -> r._3).toMap)
-    sentenceMentions(sentences(pages))
-      .withColumn("ents", array_sort(array_distinct(
-        transform(col("ments"), m => element_at(aliasMap, m.getField("phrase"))))))
-      .filter(size(col("ents")) >= 2)
-      .withColumn("pair", explode(
-        flatten(transform(col("ents"), h =>
-          transform(filter(col("ents"), x => x =!= h), t => struct(h.as("h"), t.as("t")))))))
-      .select(
-        col("doc_id"),
-        substring_index(col("pair.h"), "|", 1).as("subj"),
-        element_at(ruleMap,
-          concat(substring_index(col("pair.h"), "|", -1), lit("|"),
-            substring_index(col("pair.t"), "|", -1))).as("pred"),
-        substring_index(col("pair.t"), "|", 1).as("obj"))
-      .filter(col("pred").isNotNull)
-      .distinct()
   }
 }

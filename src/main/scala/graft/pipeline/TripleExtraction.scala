@@ -86,9 +86,9 @@ object TripleExtraction {
 
     // production path: scoring runs the ZERO-SHUFFLE fused kernels over the
     // cached work set (rule: RelationScorer.extractKernelFused; injected:
-    // KnowledgeInjection.extractInjectedFused — both pinned row-identical
-    // to their staged twins in FusedSpec/InjectionSpec); linked mentions
-    // are still derived once (single broadcast probe) for canonicalization
+    // KnowledgeInjection.extractInjectedFused — each checked against its
+    // oracle, q_scored_triples / q_injected_triples); linked mentions are
+    // still derived once (single broadcast probe) for canonicalization
     val linked = Stages.linkedFast(Stages.mentionsKernel(work, spark), spark).cache()
     // the injected kernel scores in fixed-point millis; normalize so the
     // telemetry sweep sees one double `score` column from either kernel

@@ -134,10 +134,11 @@ object VectorFeatures {
       }.toDF("vec_id", "embedding")
   }
 
-  /** mapPartitions twin of `sentenceVectors` — row-identical (spec-pinned),
-    * ~5× cheaper: the interpreted HOF path evaluates md5 + 8 substring/
-    * ascii expressions per token; here it's one digest and four byte reads.
-    * Shares the kernel sentence splitter with the mention kernels. */
+  /** A11: per-sentence token-vector sums — (doc_id, sent_id, dim,
+    * comp_sum, n_toks). Integer-exact (oracle q_sentence_vecs); the
+    * sentence MEAN is comp_sum / n_toks. One digest and four byte reads per
+    * token, over the mention kernels' sentence splitter
+    * (`Stages.docSentenceSpans`) — in-row, no shuffle. */
   def sentenceVectorsKernel(pages: DataFrame, spark: SparkSession): DataFrame = {
     import spark.implicits._
     pages.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -156,19 +157,6 @@ object VectorFeatures {
         }
       }.toDF("doc_id", "sent_id", "dim", "comp_sum", "n_toks")
   }
-
-  /** A11: per-sentence token-vector sums — (doc_id, sent_id, dim, comp_sum,
-    * n_toks). Integer-exact (oracle q_sentence_vecs); the sentence MEAN is
-    * comp_sum / n_toks. In-row over `Stages.sentences` (itself in-row), so
-    * the only exchange is whatever the consumer needs. */
-  def sentenceVectors(pages: DataFrame): DataFrame =
-    Stages.sentences(pages)
-      .withColumn("comp_sums", expr(spanSumSql("stoks")))
-      .select(col("doc_id"), col("sent_id"),
-        posexplode(col("comp_sums")).as(Seq("dim", "comp_sum")),
-        size(col("stoks")).as("n_toks"))
-      .select(col("doc_id"), col("sent_id"), col("dim").cast("int").as("dim"),
-        col("comp_sum"), col("n_toks"))
 
   /** Linked mentions joined with their doc's token array plus the span
     * slice — the shared prefix of every mention-vector variant (ONE place

@@ -23,7 +23,7 @@ class PipelineSpec extends AnyFunSuite {
   val sfDir = "/root/testdata/sf0.001"
 
   lazy val pages = Pages.fromDocuments(spark, sfDir).cache()
-  lazy val linked = Stages.linked(Stages.mentions(pages, spark), spark).cache()
+  lazy val linked = Stages.linkedFast(Stages.mentionsKernel(pages, spark), spark).cache()
 
   test("pages: per-row invariant — text column equals extractor output over html") {
     val drift = pages.filter(
@@ -44,15 +44,27 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("entity linking: prio rule and intra-tier tie rule") {
-    // "scan" → Q11 (prio 0 beats Q12 prio 1); "batch" → Q15 (min qid among Q15/Q16)
-    val got = linked.select("alias", "qid").distinct().collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(!got.contains("scan") || got("scan") == "Q11")
-    assert(!got.contains("batch") || got("batch") == "Q15")
+    val types = Map("Q11" -> "MISC", "Q12" -> "ORG", "Q15" -> "ORG", "Q16" -> "LOC")
+    val got = Stages.resolveAliasEntries(
+      Seq(("scan", "Q12", 1), ("scan", "Q11", 0), ("batch", "Q16", 1), ("batch", "Q15", 1)),
+      types)
+    // prio collision: Q11 (prio 0) beats Q12 (prio 1) whatever the order;
+    // intra-tier tie: min qid among Q15/Q16; the winner's type rides along
+    assert(got == Seq(("batch", "Q15", "ORG"), ("scan", "Q11", "MISC")))
+    // the Gazetteer fixture resolves the same way
+    val fixture = Stages.resolvedAliases.map(r => r._1 -> r._2).toMap
+    assert(fixture("scan") == "Q11" && fixture("batch") == "Q15")
+    // a type-less winner defaults to MISC, unless strict
+    assert(Stages.resolveAliasEntries(Seq(("x", "Q99", 0)), types) ==
+      Seq(("x", "Q99", "MISC")))
+    val e = intercept[IllegalArgumentException](
+      Stages.resolveAliasEntries(Seq(("x", "Q99", 0)), types, strict = true))
+    assert(e.getMessage.contains("Q99"))
   }
 
   test("no self-pairs, triples are distinct") {
-    val t = Stages.extractTriples(pages, spark).cache()
+    val t = Stages.extractTriplesKernel(pages, spark).cache()
+    assert(t.count() > 0)
     assert(t.filter(col("subj") === col("obj")).count() == 0)
     assert(t.count() == t.distinct().count())
   }
@@ -69,9 +81,10 @@ class PipelineSpec extends AnyFunSuite {
     import spark.implicits._
     // hermetic in-memory input isolates the stage plan from ingest repartition
     val raw = Seq((1L, "spark uses hash join on the table")).toDF("doc_id", "text")
-    val plan = Stages.mentions(raw, spark)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
-    assert(!plan.contains("Join"), s"unexpected join:\n$plan")
+    for (df <- Seq(Stages.mentionsKernel(raw, spark), Stages.extractTriplesKernel(raw, spark))) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"), s"unexpected shuffle:\n$plan")
+      assert(!plan.contains("Join"), s"unexpected join:\n$plan")
+    }
   }
 }

@@ -26,9 +26,13 @@ class RunnerSpec extends AnyFunSuite {
     // written triples == canonicalized direct pipeline
     val written = spark.read.parquet(s"$out/triples")
       .select("doc_id", "subj", "pred", "obj")
-    val linked = Stages.linked(Stages.mentions(pages, spark), spark)
+    // the relational feature path (pairFeatures + score), not the runner's
+    // fused kernel, so the sink is checked against an independent scorer
+    val linked = Stages.linkedFast(Stages.mentionsKernel(pages, spark), spark)
     val direct = Canonicalize(
-      pipeline.RelationScorer.extract(linked, spark).select("doc_id", "subj", "pred", "obj"),
+      pipeline.RelationScorer.score(
+          pipeline.RelationScorer.pairFeatures(linked).filter(col("n_cooc") >= 1), spark)
+        .select("doc_id", "subj", "pred", "obj"),
       linked, spark)
     assert(written.exceptAll(direct).count() == 0)
     assert(direct.exceptAll(written).count() == 0)
@@ -73,7 +77,7 @@ class RunnerSpec extends AnyFunSuite {
     val linked = Stages.linkedFast(
       Stages.mentionsKernel(pages, spark), spark).cache()
     val direct = Canonicalize(
-      pipeline.KnowledgeInjection.extractInjected(linked, spark)
+      pipeline.KnowledgeInjection.extractInjectedFused(pages, spark)
         .select("doc_id", "subj", "pred", "obj").distinct(),
       linked, spark)
     assert(written.exceptAll(direct).count() == 0 &&

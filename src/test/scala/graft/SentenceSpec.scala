@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.Stages
 
@@ -12,16 +11,15 @@ class SentenceSpec extends AnyFunSuite {
   lazy val spark = TestSpark.spark
 
   private def sents(text: String): Seq[(Int, Int, Int, Seq[String])] = {
-    import spark.implicits._
-    Stages.sentences(Seq((1L, text)).toDF("doc_id", "text"))
-      .orderBy("sent_id")
-      .collect()
-      .map(r => (r.getInt(1), r.getInt(2), r.getInt(3), r.getSeq[String](4).toSeq)).toSeq
+    val toks = text.split(" ", -1)
+    Stages.docSentenceSpans(toks).toSeq.zipWithIndex.map { case ((st, en), sid) =>
+      (sid, st, en, toks.slice(st, en + 1).toSeq)
+    }
   }
 
   private def ments(text: String): Set[(Int, Int, String)] = {
     import spark.implicits._
-    Stages.mentions(Seq((1L, text)).toDF("doc_id", "text"), spark)
+    Stages.mentionsKernel(Seq((1L, text)).toDF("doc_id", "text"), spark)
       .collect()
       .map(r => (r.getInt(r.fieldIndex("pos_start")), r.getInt(r.fieldIndex("pos_end")),
         r.getString(r.fieldIndex("alias")))).toSet
@@ -46,20 +44,18 @@ class SentenceSpec extends AnyFunSuite {
     assert(sents("in the u.s. market. prices rose") == Seq(
       (0, 0, 3, Seq("in", "the", "u.s.", "market.")),
       (1, 4, 5, Seq("prices", "rose"))))
-    // case-insensitive: "Dr." behaves like "dr."; and the kernel path agrees
+    // case-insensitive: "Dr." behaves like "dr."; and the mention kernel
+    // splits the same way
     assert(sents("Dr. who arrived. then left") == Seq(
       (0, 0, 2, Seq("Dr.", "who", "arrived.")),
       (1, 3, 4, Seq("then", "left"))))
     import spark.implicits._
     val df = Seq((1L, "dr. spark met hash. join u.s. merge")).toDF("doc_id", "text")
-    val hof = Stages.mentions(df, spark).collect()
-      .map(r => (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))).toSet
     val ker = Stages.mentionsKernel(df, spark).collect()
       .map(r => (r.getInt(1), r.getInt(2), r.getInt(3), r.getString(4))).toSet
-    assert(hof == ker)
     // "hash." closes the sentence, so "join" opens sentence 1; "u.s." does
     // not close it, so "merge" shares sentence 1 with "join"
-    assert(hof == Set((0, 1, 1, "spark"), (1, 4, 4, "join"), (1, 6, 6, "merge")))
+    assert(ker == Set((0, 1, 1, "spark"), (1, 4, 4, "join"), (1, 6, 6, "merge")))
   }
 
   test("punctuation-less run-ons are capped at SentenceChunk tokens") {
@@ -99,7 +95,7 @@ class SentenceSpec extends AnyFunSuite {
   test("span counts in linked output survive linking") {
     import spark.implicits._
     val df = Seq((7L, "customer runs sort merge join on table scan")).toDF("doc_id", "text")
-    val got = Stages.linkedFast(Stages.mentions(df, spark), spark)
+    val got = Stages.linkedFast(Stages.mentionsKernel(df, spark), spark)
       .select("alias", "qid", "pos_start", "pos_end").collect()
       .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getInt(3))).toSet
     assert(got == Set(

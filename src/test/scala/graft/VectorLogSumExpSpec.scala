@@ -62,8 +62,8 @@ class VectorLogSumExpSpec extends AnyFunSuite {
 
   test("pooled kernel == scalar kernel under fixture weights (wPool = 0)") {
     val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001")
-    val linked = Stages.linkedFast(Stages.mentions(pages, spark), spark)
-    val scalar = RelationScorer.extract(linked, spark)
+    val linked = Stages.linkedFast(Stages.mentionsKernel(pages, spark), spark)
+    val scalar = RelationScorer.extractKernelFused(pages, spark)
       .select("doc_id", "subj", "pred", "obj").distinct()
     val pooled = RelationScorer.scorePooled(
       RelationScorer.pooledPairFeatures(linked).filter(col("n_cooc") >= 1), spark)
