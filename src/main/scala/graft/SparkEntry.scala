@@ -888,14 +888,7 @@ object SparkEntry {
       val sameAs = pipeline.Enrich.kgTriples(s)
         .filter(col("r") === ops.KgGraph.SameAsPred)
         .select(col("h").as("a"), col("t").as("b"))
-      val canon = ops.KgGraph.sameAsCanon(sameAs)
-      val remapped = trips
-        .join(canon.select(col("v").as("subj"), col("comp").as("cs")), Seq("subj"), "left")
-        .join(canon.select(col("v").as("obj"), col("comp").as("co")), Seq("obj"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cs"), col("subj")).as("subj"), col("pred"),
-          coalesce(col("co"), col("obj")).as("obj"))
-        .filter(col("subj") =!= col("obj"))
+      val remapped = ops.KgGraph.sameAsRemap(trips, sameAs)
         .withColumn("score_milli", lit(1000L))
       pipeline.KgFusion.fuse(remapped)
         .orderBy(col("subj"), col("pred"), col("obj"))

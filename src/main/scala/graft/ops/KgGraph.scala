@@ -185,26 +185,10 @@ object KgGraph {
       .withColumn("is_hot", (col("deg") >= HotDegreeThreshold).cast("int"))
   }
 
-  /** owl:sameAs-style cross-document entity canonicalization — the
-    * corpus-level half of the north_star's union-find canonicalize (the
-    * per-document half is `pipeline.Canonicalize`): entities connected by
-    * `sameAs` (columns `a`, `b`, undirected) collapse to one canonical id
-    * = the MIN qid of the component (deterministic total order), and the
-    * triple table is remapped through that mapping, merge-created
-    * self-loops dropped, duplicates collapsed.
-    *
-    * Components come from the pointer-jumping
-    * [[ConnectedComponents.labelPropagation]] (O(log diameter) rounds,
-    * convergence-checked); the remap is two left equi-joins on the uniform
-    * qid key — entities outside any sameAs clique pass through via
-    * coalesce, so the mapping table stays |sameAs|-sized, never
-    * |entities|-sized. */
-  /** The canonical mapping behind [[sameAsMerge]]: (v, comp) for every
-    * entity in a sameAs clique, comp = the component's min qid. Exposed so
-    * composed pipelines (the snapshot build, q_kg_pipeline) can remap
-    * per-document rows BEFORE fusing — canonicalize-then-fuse merges the
-    * evidence of aliases into one support count, which is the production
-    * order. */
+  /** The canonical mapping of owl:sameAs-style entity canonicalization:
+    * (v, comp) for every entity in a sameAs clique (columns `a`, `b`,
+    * undirected), comp = the component's MIN qid (deterministic total
+    * order). Components come from [[ConnectedComponents.adaptive]]. */
   def sameAsCanon(sameAs: DataFrame): DataFrame = {
     val verts = sameAs.select(col("a").as("v")).union(sameAs.select(col("b").as("v")))
       .distinct().select(lit("g").as("scope"), col("v"))
@@ -217,14 +201,31 @@ object KgGraph {
       .select(col("v"), col("comp"))
   }
 
-  def sameAsMerge(triples: DataFrame, sameAs: DataFrame): DataFrame = {
+  /** Remap the `subj` and `obj` of every row through the [[sameAsCanon]]
+    * mapping, keeping the row's other columns and their order, and drop
+    * merge-created self-loops. The remap is two left equi-joins on the
+    * uniform qid key — entities outside any sameAs clique pass through via
+    * coalesce, so the mapping table stays |sameAs|-sized, never
+    * |entities|-sized. The snapshot build and q_kg_pipeline remap
+    * per-document rows BEFORE fusing: canonicalize-then-fuse merges the
+    * evidence of aliases into one support count, the production order. */
+  def sameAsRemap(rows: DataFrame, sameAs: DataFrame): DataFrame = {
     val canon = sameAsCanon(sameAs)
-    triples
+    rows
       .join(canon.select(col("v").as("subj"), col("comp").as("c_subj")), Seq("subj"), "left")
       .join(canon.select(col("v").as("obj"), col("comp").as("c_obj")), Seq("obj"), "left")
-      .select(coalesce(col("c_subj"), col("subj")).as("subj"), col("pred"),
-        coalesce(col("c_obj"), col("obj")).as("obj"))
+      .select(rows.columns.toSeq.map {
+        case c @ ("subj" | "obj") => coalesce(col(s"c_$c"), col(c)).as(c)
+        case c => col(c)
+      }: _*)
       .filter(col("subj") =!= col("obj"))
-      .distinct()
   }
+
+  /** Corpus-level entity canonicalization of a (subj, pred, obj) triple
+    * table: [[sameAsRemap]], then duplicates collapsed. This is where
+    * graft's union-find canonicalize does real work; the per-document
+    * [[graft.pipeline.Canonicalize]] is the identity under graft's
+    * one-qid-per-alias linker. */
+  def sameAsMerge(triples: DataFrame, sameAs: DataFrame): DataFrame =
+    sameAsRemap(triples.select("subj", "pred", "obj"), sameAs).distinct()
 }

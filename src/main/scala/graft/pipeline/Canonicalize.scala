@@ -18,6 +18,14 @@ import graft.ops.ConnectedComponents
   * Runs partition-local per document inside mapGroups — the per-doc graph
   * is tiny (≤ max_entity_size nodes, reference caps 42/100), so the union-
   * find never shuffles; only the final dedup does.
+  *
+  * It only changes a row when linking returns candidate SETS, as KIRE's
+  * does. graft's linker resolves every alias to exactly one qid
+  * (`Stages.resolveAliasEntries`), so each component holds one qid, the
+  * mapping is the identity and `TripleExtraction.run` does not call this;
+  * PipelineSpec pins `eid == canonical`, and it fails first if linking
+  * ever returns candidate sets. Kept as the library operator for such a
+  * linker.
   */
 object Canonicalize {
 

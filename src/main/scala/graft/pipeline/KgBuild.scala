@@ -2,8 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 /** The INCREMENTAL corpus-KG build — the snapshot loop a 10^12-document
   * engine actually runs (`TripleExtraction.run` is the per-crawl extraction
@@ -41,35 +40,27 @@ object KgBuild {
 
   private def manifestPath(outDir: String) = Paths.get(outDir, "_kg_manifest.jsonl")
 
-  /** Anchored full-record shape of one manifest line (we own the writer,
-    * so the exact field order is a contract): a TORN line — a crash mid-
-    * append leaving a partial record, possibly with the next record
-    * concatenated onto it — cannot match the ^…$ anchors and is treated as
-    * uncommitted, so the snapshot is rebuilt idempotently instead of the
-    * old per-key regex scraping stitching fields from two records into one
-    * bogus 'committed' entry and corrupting the delta-base chain. */
-  private val ManifestLineRe =
-    ("""^\{"snap":(-?\d+),"status":"done","n_triples":(-?\d+),""" +
+  /** Full-record shape of one manifest line (we own the writer, so the
+    * exact field order is a contract): a TORN line is treated as
+    * uncommitted ([[CommitLog]]), so the snapshot is rebuilt idempotently
+    * and can never become a bogus delta base. */
+  private val DoneLine =
+    ("""\{"snap":(-?\d+),"status":"done","n_triples":(-?\d+),""" +
       """"added":(-?\d+),"removed":(-?\d+),"changed":(-?\d+),""" +
-      """"wall_ms":(-?\d+)\}$""").r
+      """"wall_ms":(-?\d+)\}""").r
 
   /** Committed snapshots: snapId → its manifest metrics line. */
-  def committed(outDir: String): Map[Long, SnapshotMetrics] = {
-    val p = manifestPath(outDir)
-    if (!Files.exists(p)) Map.empty
-    else Files.readAllLines(p).asScala.flatMap {
-      case ManifestLineRe(id, n, a, r, c, w) =>
-        Some(id.toLong -> SnapshotMetrics(id.toLong, n.toLong, a.toLong,
-          r.toLong, c.toLong, w.toLong))
-      case _ => None // torn/blank line: not a commit
+  def committed(outDir: String): Map[Long, SnapshotMetrics] =
+    CommitLog.read(manifestPath(outDir), DoneLine).map { g =>
+      val Seq(id, n, a, r, c, w) = g.map(_.toLong)
+      id -> SnapshotMetrics(id, n, a, r, c, w)
     }.toMap
-  }
 
   /** Build (or skip, if committed) snapshot `snapId` from `pages`.
     * `inject` selects the knowledge-injection kernel (KIRE's production
     * configuration) vs the rule kernel — both zero-shuffle fused forms.
     * `sameAs` (columns a, b) turns on cross-document entity
-    * canonicalization BEFORE fusing ([[graft.ops.KgGraph.sameAsCanon]]):
+    * canonicalization BEFORE fusing ([[graft.ops.KgGraph.sameAsRemap]]):
     * alias assertions of one fact merge into one support count, and
     * merge-created self-loops are dropped — the q_kg_pipeline order. */
   def buildSnapshot(pages: DataFrame, outDir: String, snapId: Long,
@@ -91,16 +82,7 @@ object KgBuild {
        else RelationScorer.extractKernelFused(pages, spark)
          .withColumn("score_milli", lit(1000L)))
         .select("doc_id", "subj", "pred", "obj", "score_milli")
-    val scored = sameAs.fold(scored0) { sa =>
-      val canon = graft.ops.KgGraph.sameAsCanon(sa)
-      scored0
-        .join(canon.select(col("v").as("subj"), col("comp").as("cs")), Seq("subj"), "left")
-        .join(canon.select(col("v").as("obj"), col("comp").as("co")), Seq("obj"), "left")
-        .select(col("doc_id"),
-          coalesce(col("cs"), col("subj")).as("subj"), col("pred"),
-          coalesce(col("co"), col("obj")).as("obj"), col("score_milli"))
-        .filter(col("subj") =!= col("obj"))
-    }
+    val scored = sameAs.fold(scored0)(graft.ops.KgGraph.sameAsRemap(scored0, _))
     val fused = KgFusion.fuse(scored)
     fused.write.mode("overwrite").parquet(s"$outDir/snapshots/snap=$snapId")
 
@@ -121,16 +103,11 @@ object KgBuild {
     val m = SnapshotMetrics(snapId, n,
       counts.getOrElse("added", 0L), counts.getOrElse("removed", 0L),
       counts.getOrElse("support_changed", 0L), System.currentTimeMillis() - t0)
-    // commit point: everything above is durable before this line. The
-    // record is "\n"-PREFIXED so that a previous torn append (partial line
-    // without its trailing newline) can never concatenate with this one —
-    // the torn fragment stays on its own (rejected) line and this record
-    // starts fresh; blank lines are skipped by the anchored parse.
-    Files.write(manifestPath(outDir),
-      ("\n" + s"""{"snap":${m.snapId},"status":"done","n_triples":${m.nTriples},""" +
+    // commit point: everything above is durable before this line
+    CommitLog.append(manifestPath(outDir),
+      s"""{"snap":${m.snapId},"status":"done","n_triples":${m.nTriples},""" +
         s""""added":${m.added},"removed":${m.removed},"changed":${m.changed},""" +
-        s""""wall_ms":${m.wallMillis}}""" + "\n").getBytes,
-      StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+        s""""wall_ms":${m.wallMillis}}""")
     m
   }
 }

@@ -260,8 +260,8 @@ object Stages {
     * because doc_id is part of the key. With duplicate doc_id rows
     * (re-ingested doc, replayed partition) this kernel emits every triple
     * once per input row; FusedSpec pins that behaviour explicitly. Callers
-    * that cannot guarantee uniqueness must dedup upstream (the runner's
-    * per-bucket overwrite does) or append .distinct(). */
+    * that cannot guarantee uniqueness must dedup upstream or append
+    * .distinct() (the runner's one distinct before its sink does). */
   def extractTriplesKernel(pages: DataFrame, spark: SparkSession): DataFrame =
     extractTriplesKernelWith(pages, spark, kernelDict)
 

@@ -2,19 +2,24 @@ package graft.pipeline
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import java.nio.file.{Files, Paths, StandardOpenOption}
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Paths}
 
 /** The end-to-end production job: pages → triples, with the north_rule's
   * operational contract:
   *
+  *  - **dataflow**: one scoring-kernel pass over the cached pages (mention
+  *    match, link, pair-gen and decode in-row), each row joined back to its
+  *    page's bucket, one distinct, then the per-bucket sink. The kernel's
+  *    rows are written as they are: the linker resolves every alias to ONE
+  *    qid, so the per-document union-find of [[Canonicalize]] would map
+  *    every entity to itself (PipelineSpec pins that invariant).
   *  - **bucketed partitioning**: work is split by pmod(xxhash64(url), N) —
   *    the parquet stand-in for Iceberg's bucket(url) partition transform
   *    (no Iceberg runtime ships in this sandbox; the manifest logic below
   *    is exactly what Iceberg snapshot metadata would give us for free).
   *  - **per-partition lineage rows**: one row per bucket with status +
   *    exact count + its own wall time, appended to a JSON-lines manifest
-  *    immediately after that bucket commits.
+  *    ([[CommitLog]]) immediately after that bucket commits.
   *  - **metrics**: doc count from the cache-materializing `count()` action
   *    (exactly-once — accumulators in transformations over-count on retry);
   *    per-bucket triple counts via `Dataset.observe` on the write action
@@ -41,15 +46,14 @@ object TripleExtraction {
 
   private def manifestPath(outDir: String) = Paths.get(outDir, "_lineage.jsonl")
 
+  /** Full-record shape of a bucket's commit line (the writer below owns the
+    * field order); a torn line does not match, so its bucket replays. */
+  private val DoneLine =
+    """\{"bucket":(\d+),"status":"done","n_triples":(\d+),"wall_ms":(\d+)\}""".r
+
   /** Buckets already marked done in the lineage manifest. */
-  def doneBuckets(outDir: String): Set[Int] = {
-    val p = manifestPath(outDir)
-    if (!Files.exists(p)) Set.empty
-    else Files.readAllLines(p).asScala
-      .filter(_.contains("\"status\":\"done\""))
-      .flatMap(l => "\"bucket\":(\\d+)".r.findFirstMatchIn(l).map(_.group(1).toInt))
-      .toSet
-  }
+  def doneBuckets(outDir: String): Set[Int] =
+    CommitLog.read(manifestPath(outDir), DoneLine).map(_.head.toInt).toSet
 
   /** Run (or resume) the extraction job. `lang` applies the P10 language
     * predicate (input_hint lang column) — partition-prunable at the Iceberg
@@ -87,34 +91,33 @@ object TripleExtraction {
     // production path: scoring runs the ZERO-SHUFFLE fused kernels over the
     // cached work set (rule: RelationScorer.extractKernelFused; injected:
     // KnowledgeInjection.extractInjectedFused — each checked against its
-    // oracle, q_scored_triples / q_injected_triples); linked mentions are
-    // still derived once (single broadcast probe) for canonicalization
-    val linked = Stages.linkedFast(Stages.mentionsKernel(work, spark), spark).cache()
-    // the injected kernel scores in fixed-point millis; normalize so the
-    // telemetry sweep sees one double `score` column from either kernel
+    // oracle, q_scored_triples / q_injected_triples). The injected kernel
+    // scores in fixed-point millis; normalize so the telemetry sweep sees
+    // one double `score` column from either kernel.
     val scoredFull =
       (if (inject) KnowledgeInjection.extractInjectedFused(work, spark)
          .withColumn("score", col("score_milli") / lit(1000.0))
        else RelationScorer.extractKernelFused(work, spark))
-    val scored = scoredFull.select("doc_id", "subj", "pred", "obj")
-    val canonical = Canonicalize(scored, linked, spark)
-      .join(work.select(col("doc_id"), col("bucket")).distinct(), Seq("doc_id"))
+    // each row joins back to its page's bucket; the one distinct collapses
+    // the per-row copies a duplicated doc_id makes the kernels emit
+    val routed = scoredFull.select("doc_id", "subj", "pred", "obj")
+      .join(work.select("doc_id", "bucket"), Seq("doc_id"))
+      .distinct()
       .cache()
 
     var totalTriples = 0L
     pending.foreach { b =>
       val tb = System.currentTimeMillis()
       val obs = Observation(s"graft.bucket.$b.${t0}")
-      canonical.filter(col("bucket") === b).drop("bucket")
+      routed.filter(col("bucket") === b).drop("bucket")
         .observe(obs, count(lit(1)).as("n_triples"))
         .write.mode("overwrite").parquet(s"$outDir/triples/bucket=$b")
       val n = obs.get("n_triples").asInstanceOf[Long]
       totalTriples += n
       val wallB = System.currentTimeMillis() - tb
       // commit point: the bucket's data is fully written before this line
-      Files.write(manifestPath(outDir),
-        (s"""{"bucket":$b,"status":"done","n_triples":$n,"wall_ms":$wallB}""" + "\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      CommitLog.append(manifestPath(outDir),
+        s"""{"bucket":$b,"status":"done","n_triples":$n,"wall_ms":$wallB}""")
     }
     // post-run eval telemetry (only with a labeled slice): best operating
     // point from the BINNED sweep (driver sees ≤ nBins rows) + per-distance
@@ -125,8 +128,9 @@ object TripleExtraction {
         scoredFull.select(col("doc_id"), col("subj"), col("pred"), col("obj"),
           col("score")), g)
       val bestOpt = sweep.filter(col("is_best")).collect().headOption
+      val linked = Stages.linkedFast(Stages.mentionsKernel(work, spark), spark)
       val rec = graft.eval.Evaluator.recallByDistanceBucket(
-          canonical.select("doc_id", "subj", "pred", "obj"), g,
+          routed.select("doc_id", "subj", "pred", "obj"), g,
           RelationScorer.pairFeatures(linked))
         .orderBy(col("bucket")).collect()
         .map(r => s"""{"bucket":${r.getInt(0)},"n_gold":${r.getLong(1)},""" +
@@ -136,13 +140,11 @@ object TripleExtraction {
         f""""best_theta":${b.getDouble(1)}%.6f,"p_permille":${b.getLong(5)},""" +
           s""""r_permille":${b.getLong(6)},"f1_permille":${b.getLong(7)},"""
       }.getOrElse("")
-      Files.write(manifestPath(outDir),
-        (s"""{"status":"metrics",$head"recall_by_dist":$rec}""" + "\n").getBytes,
-        StandardOpenOption.CREATE, StandardOpenOption.APPEND)
+      CommitLog.append(manifestPath(outDir),
+        s"""{"status":"metrics",$head"recall_by_dist":$rec}""")
     }
     work.unpersist()
-    linked.unpersist()
-    canonical.unpersist()
+    routed.unpersist()
     RunMetrics(pending, nDocs, totalTriples, System.currentTimeMillis() - t0)
   }
 }

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import graft.pipeline.Stages
+import graft.pipeline.{Canonicalize, Stages}
 import graft.sources.Pages
 
 object TestSpark {
@@ -60,6 +60,23 @@ class PipelineSpec extends AnyFunSuite {
     val e = intercept[IllegalArgumentException](
       Stages.resolveAliasEntries(Seq(("x", "Q99", 0)), types, strict = true))
     assert(e.getMessage.contains("Q99"))
+  }
+
+  test("one qid per alias, so per-document canonicalization is the identity") {
+    // TripleExtraction.run writes the kernel rows without Canonicalize: if
+    // linking ever returns candidate sets, this fails and the runner must
+    // canonicalize again
+    val aliases = Stages.resolvedAliases.map(_._1)
+    assert(aliases.nonEmpty && aliases.distinct.size == aliases.size)
+    val dwie = docred.DocRED.asPages(docred.DocRED.read(spark,
+      getClass.getResource("/dwie_fixture.jsonl").getPath))
+    Seq(pages, dwie).foreach { p =>
+      val m = Canonicalize.mapping(
+        Stages.linkedFast(Stages.mentionsKernel(p, spark), spark), spark).cache()
+      assert(m.count() > 0)
+      assert(m.filter(col("eid") =!= col("canonical")).count() == 0)
+      m.unpersist()
+    }
   }
 
   test("no self-pairs, triples are distinct") {

@@ -171,6 +171,40 @@ class RunnerSpec extends AnyFunSuite {
     assert(m.docs == expect)
   }
 
+  test("duplicated page: each of its triples is committed once") {
+    val pages = Pages.fromDocuments(spark, sfDir)
+    // doc 0 yields triples; its second copy makes the kernel emit each twice
+    val dup = pages.union(pages.filter(col("doc_id") === 0L))
+    val out = Files.createTempDirectory("graft_dup").toString
+    val m = TripleExtraction.run(dup, out, spark)
+    assert(m.docs == 501)
+    val written = spark.read.parquet(s"$out/triples")
+      .select("doc_id", "subj", "pred", "obj")
+    val expect = pipeline.RelationScorer.extractKernelFused(pages, spark)
+      .select("doc_id", "subj", "pred", "obj").distinct()
+    assert(written.filter(col("doc_id") === 0L).count() > 0)
+    assert(m.triples == written.count())
+    assert(written.exceptAll(expect).count() == 0 && expect.exceptAll(written).count() == 0)
+  }
+
+  test("lineage manifest: a torn last line is not a commit and is never appended onto") {
+    val out = Files.createTempDirectory("graft_torn").toString
+    val pages = Pages.fromDocuments(spark, sfDir)
+    val mp = java.nio.file.Paths.get(out, "_lineage.jsonl")
+    // a crash mid-append cut bucket 14's record after its done field, with
+    // no trailing newline
+    val torn = """{"bucket":14,"status":"done","n_tri"""
+    val done = (0 to 13).map(b => s"""{"bucket":$b,"status":"done","n_triples":0,"wall_ms":0}""")
+    Files.write(mp, (done.mkString("\n") + "\n" + torn).getBytes)
+    assert(TripleExtraction.doneBuckets(out) == (0 to 13).toSet)
+    assert(TripleExtraction.run(pages, out, spark).buckets.sorted == Seq(14, 15))
+    // the fragment stays on its own line; both replayed records parse
+    val lines = Files.readAllLines(mp)
+    assert(lines.size == 17 && lines.get(14) == torn)
+    assert(TripleExtraction.doneBuckets(out) == (0 until 16).toSet)
+    assert(TripleExtraction.run(pages, out, spark).buckets.isEmpty)
+  }
+
   test("canonicalize merges aliases linked to the same qid, drops self-loops") {
     import spark.implicits._
     // two aliases in one doc voted to the same qid + a distinct second entity
