@@ -18,7 +18,7 @@ import org.apache.spark.sql.SparkSession
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "1").toInt
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")
     val planTag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "before")

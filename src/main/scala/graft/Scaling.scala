@@ -83,8 +83,9 @@ object Scaling {
 
   /** The job under measurement, selected by SPARK_GRAFT_JOB:
     *  - "rule" (default): pages scan → html→text (native expression) →
-    *    mapPartitions mention/link/pair/classify kernel → count (the
-    *    north_star extraction shape, `Stages.extractTriplesKernel`);
+    *    the runner's mapPartitions mention/link/pair/decode kernel → count
+    *    (`Stages.extractTriplesKernel`, the (doc_id, subj, pred, obj)
+    *    projection of `RelationScorer.extractKernelFused`);
     *  - "injected": the same front end feeding the ZERO-SHUFFLE fused
     *    knowledge-injection kernel (broadcast-KB entity knowledge +
     *    96-class decode) — the complete KIRE-shaped pipeline;
@@ -337,7 +338,7 @@ object Scaling {
         graft.ops.TrainingData.survivors(
           c.filter(col("doc_id") % 97 =!= 0),
           c.filter(col("doc_id") % 97 === 0), spark).count()
-      case _ => Stages.extractTriplesKernelWith(pages, spark, dict).count()
+      case _ => Stages.extractTriplesKernel(pages, spark, dict).count()
     }
     val secs = (System.nanoTime() - t0) / 1e9
     (nDocs, nTriples, secs)

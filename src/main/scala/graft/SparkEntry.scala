@@ -224,9 +224,9 @@ object SparkEntry {
       // entity_labels.nt3), resolved once, broadcast into the kernels —
       // no plan literals at this size. The oracle reads the same files.
       val resolved = fileDictResolved(s)
-      val ments = Stages.mentionsKernelWith(Pages.fromDocuments(s, dir), s,
+      val ments = Stages.mentionsKernel(Pages.fromDocuments(s, dir), s,
         Stages.kernelDictFrom(resolved))
-      Stages.linkedFastWith(ments, s, resolved)
+      Stages.linkedFast(ments, s, resolved)
         .groupBy(col("doc_id"), col("alias"), col("qid"), col("ner_type"))
         .agg(count(lit(1)).as("n_mentions"))
         .orderBy(col("doc_id"), col("alias"))
@@ -234,7 +234,7 @@ object SparkEntry {
     "q_triples_file" -> ((s, dir) => {
       // the production extraction kernel fed by the file-backed 63k dict
       val resolved = fileDictResolved(s)
-      Stages.extractTriplesKernelWith(Pages.fromDocuments(s, dir), s,
+      Stages.extractTriplesKernel(Pages.fromDocuments(s, dir), s,
           Stages.kernelDictFrom(resolved))
         .orderBy(col("doc_id"), col("subj"), col("pred"), col("obj"))
     }),

@@ -1,6 +1,6 @@
 package graft.pipeline
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
 
@@ -30,8 +30,8 @@ import java.nio.file.{Files, Paths}
   *
   * Scale shape: fuse is the map-side-combinable groupBy family
   * (KgFusion scaladoc); the delta is one full-outer SMJ on the uniform
-  * triple key; status counts ride the same pass as a ≤4-row aggregate —
-  * no driver-side data, no windows.
+  * triple key; the triple and status counts are `Dataset.observe`d on the
+  * two writes (exactly once per write action) — no extra job, no windows.
   */
 object KgBuild {
 
@@ -83,26 +83,24 @@ object KgBuild {
          .withColumn("score_milli", lit(1000L)))
         .select("doc_id", "subj", "pred", "obj", "score_milli")
     val scored = sameAs.fold(scored0)(graft.ops.KgGraph.sameAsRemap(scored0, _))
-    val fused = KgFusion.fuse(scored)
-    fused.write.mode("overwrite").parquet(s"$outDir/snapshots/snap=$snapId")
+    val snapObs = Observation(s"graft.kg.snap.$snapId.$t0")
+    KgFusion.fuse(scored)
+      .observe(snapObs, count(lit(1)).as("n_triples"))
+      .write.mode("overwrite").parquet(s"$outDir/snapshots/snap=$snapId")
 
     // delta base: previous COMMITTED snapshot (manifest, not ls)
     val written = spark.read.parquet(s"$outDir/snapshots/snap=$snapId")
     val prev = done.keys.filter(_ < snapId).maxOption.map(p =>
       spark.read.parquet(s"$outDir/snapshots/snap=$p"))
       .getOrElse(written.filter(lit(false)))
-    val delta = KgFusion.snapshotDelta(prev, written)
-    delta.write.mode("overwrite").parquet(s"$outDir/deltas/snap=$snapId")
-
-    // ≤4-row status aggregate over the written delta (re-read: exact
-    // committed bytes, one narrow scan)
-    val counts = spark.read.parquet(s"$outDir/deltas/snap=$snapId")
-      .groupBy(col("status")).agg(count(lit(1)).as("n"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val n = written.count()
-    val m = SnapshotMetrics(snapId, n,
-      counts.getOrElse("added", 0L), counts.getOrElse("removed", 0L),
-      counts.getOrElse("support_changed", 0L), System.currentTimeMillis() - t0)
+    val deltaObs = Observation(s"graft.kg.delta.$snapId.$t0")
+    def nStatus(s: String) = count_if(col("status") === s).as(s)
+    KgFusion.snapshotDelta(prev, written)
+      .observe(deltaObs, nStatus("added"), nStatus("removed"), nStatus("support_changed"))
+      .write.mode("overwrite").parquet(s"$outDir/deltas/snap=$snapId")
+    def n(obs: Observation, k: String) = obs.get(k).asInstanceOf[Long]
+    val m = SnapshotMetrics(snapId, n(snapObs, "n_triples"), n(deltaObs, "added"),
+      n(deltaObs, "removed"), n(deltaObs, "support_changed"), System.currentTimeMillis() - t0)
     // commit point: everything above is durable before this line
     CommitLog.append(manifestPath(outDir),
       s"""{"snap":${m.snapId},"status":"done","n_triples":${m.nTriples},""" +

@@ -214,17 +214,15 @@ object KnowledgeInjection {
         it.flatMap { case (docId, text) =>
           val ments = Stages.docMentions(text.split(" ", -1), byFirst)
           val arr = RelationScorer.docEntityTable(ments)
-          val docents = arr.iterator
-            .collect { case (q, (tpe, _)) if tpe != "TIME" => q }.toSet
-          val sentSets = arr.map(_._2._2.toSet)
+          val docents = arr.iterator.filter(_.tpe != "TIME").map(_.qid).toSet
           // per-entity knowledge, hoisted out of the k² pair loop; the
           // doc-scoped neighborhood gets the SAME MaxNbrSet smallest-first
           // bound as the oracle (and as `BoundedMinSet` in KgFusion), so
           // hub entities agree too
-          val nbrs = arr.map { case (q, (tpe, _)) =>
+          val nbrs = arr.map { e =>
             val scoped = {
-              val full = adjM.getOrElse(q, Set.empty[String])
-              if (tpe != "TIME") full else full.intersect(docents)
+              val full = adjM.getOrElse(e.qid, Set.empty[String])
+              if (e.tpe != "TIME") full else full.intersect(docents)
             }
             if (scoped.size <= MaxNbrSet) scoped
             else scoped.toArray.sorted.take(MaxNbrSet).toSet
@@ -233,42 +231,41 @@ object KnowledgeInjection {
           // gen_coref_data.py:148-188): all positions of the qid's aliases
           // pair, so each mention has min(n_qid_mentions − 1, CorefCap)
           // partners — the sent-id multiset length IS the mention count
-          val coref = arr.map { case (_, (_, sents)) =>
-            math.min(sents.length - 1, CorefCap)
-          }
-          val instA = arr.map { case (q, _) => instM.getOrElse(q, "entity") }
+          val coref = arr.map(e => math.min(e.sents.length - 1, CorefCap))
+          val instA = arr.map(e => instM.getOrElse(e.qid, "entity"))
           val out = scala.collection.mutable.ArrayBuffer.empty[InjScoredTriple]
           var i = 0
           while (i < arr.length) {
-            val (hQid, (hType, hS)) = arr(i)
+            val h = arr(i)
             var j = 0
             while (j < arr.length) {
               if (i != j) {
-                val (tQid, (tType, tS)) = arr(j)
-                val (msd, cooc) = RelationScorer.pairDistCooc(hS, tS)
+                val t = arr(j)
+                val cooc = RelationScorer.coocCount(h.sents, t.sents)
                 // direct edges are invisible only when BOTH endpoints are
                 // TIME (neither endpoint in the one-hop docents set)
                 val suggRels =
-                  if (hType == "TIME" && tType == "TIME") Nil
-                  else suggM.getOrElse((hQid, tQid), Nil)
+                  if (h.tpe == "TIME" && t.tpe == "TIME") Nil
+                  else suggM.getOrElse((h.qid, t.qid), Nil)
                 // candidate pre-gate (exact): an admitted pair with no rule
                 // for its type pair and no suggested relation decodes
                 // NOTHING (every logit ≤ −WBase + maxSoft < 0), so skip the
                 // evidence/feature/decode allocations entirely — the common
                 // case for non-rule type pairs
                 val hasRule = cooc >= 1 &&
-                  cw.ruleIdx.getOrElse((hType, tType), EmptyIdx).nonEmpty
+                  cw.ruleIdx.getOrElse((h.tpe, t.tpe), EmptyIdx).nonEmpty
                 if (hasRule || suggRels.nonEmpty) {
-                  val ev = RelationScorer.evidenceOf(sentSets(i), sentSets(j))
+                  val msd = RelationScorer.minSentDist(h.sents, t.sents)
+                  val ev = RelationScorer.evidenceOf(h.sents, t.sents)
                   // membership count over the smaller set — no intersection
                   // Set allocated per pair
                   val (sm, bg) = if (nbrs(i).size <= nbrs(j).size) (nbrs(i), nbrs(j))
                                  else (nbrs(j), nbrs(i))
                   var shared = 0
                   sm.foreach(z =>
-                    if (z != hQid && z != tQid && bg.contains(z)) shared += 1)
+                    if (z != h.qid && z != t.qid && bg.contains(z)) shared += 1)
                   out ++= decodeInjectedPair(cw, InjectedFeature(
-                    docId, hQid, hType, tQid, tType, msd, cooc, ev, suggRels,
+                    docId, h.qid, h.tpe, t.qid, t.tpe, msd, cooc, ev, suggRels,
                     shared, coref(i), coref(j),
                     if (instA(i) == instA(j)) 1 else 0))
                 }

@@ -3,6 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kb.Gazetteer
+import scala.collection.mutable.ArrayBuilder
 
 /** The relation-classification kernel: a deterministic, featurized scorer
   * with the same I/O contract as the reference's model inference
@@ -105,12 +106,12 @@ object RelationScorer {
 
   /** Adaptive-threshold decode over a compiled base array: positives only
     * (few), ordered by (−logit, relation), capped at MaxLabels. */
-  private[pipeline] def decode(cw: Compiled, base: Array[Double], soft: Double,
-      extra: Int => Double = _ => 0.0): Seq[(String, Double)] = {
+  private[pipeline] def decode(cw: Compiled, base: Array[Double],
+      soft: Double): Seq[(String, Double)] = {
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var i = 0
     while (i < cw.rels.length) {
-      val s = base(i) + soft + extra(i)
+      val s = base(i) + soft
       if (s > 0.0) buf += ((cw.rels(i), s))
       i += 1
     }
@@ -119,16 +120,22 @@ object RelationScorer {
 
   private val EmptyIdx = Array.empty[Int]
 
-  /** `decode` with EXACT candidate pruning for the no-`extra` paths: when
-    * soft < negGuard, a negative-base relation cannot clear the threshold,
-    * so only the type pair's positive-base indices are walked (typically 1
-    * instead of 96). Falls back to the full walk when the guard does not
-    * hold (e.g. pathological co-occurrence counts), so the output equals
+  /** `decode` with EXACT candidate pruning: when soft < negGuard, a
+    * negative-base relation cannot clear the threshold, so only the type
+    * pair's positive-base indices are walked (typically 1 instead of 96).
+    * Falls back to the full walk when the guard does not hold (e.g.
+    * pathological co-occurrence counts), so the output equals
     * `decode(cw, base, soft)` for EVERY input — pinned in DecodeSpec. */
   private[pipeline] def decodeFast(cw: Compiled, typePair: (String, String),
       base: Array[Double], soft: Double): Seq[(String, Double)] = {
     if (soft >= cw.negGuard) return decode(cw, base, soft)
     val cand = cw.posIdx.getOrElse(typePair, EmptyIdx)
+    // single-candidate fast path (one positive-base relation — the common
+    // case): no buffer, no sort
+    if (cand.length == 1) {
+      val s = base(cand(0)) + soft
+      return if (s > 0.0) (cw.rels(cand(0)), s) :: Nil else Nil
+    }
     if (cand.isEmpty) return Nil
     val buf = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
     var k = 0
@@ -141,43 +148,78 @@ object RelationScorer {
     buf.sortBy { case (r, s) => (-s, r) }.take(MaxLabels).toSeq
   }
 
-  /** Shared per-pair sentence statistics — the Scala form of pairFeatures'
-    * HOF arithmetic, used by both the fused scorer and the injection pair
-    * kernel: (min |a−b|, multiset co-occurrence count). Evidence (the
-    * sorted distinct co-occurring sentences) is computed separately via
-    * `evidenceOf` over per-entity sets hoisted OUTSIDE the k² pair loop —
-    * building sets per pair would do k× redundant conversions per entity
-    * on the kernels' hot path. */
-  private[pipeline] def pairDistCooc(hS: collection.Seq[Int],
-                                     tS: collection.Seq[Int]): (Int, Long) = {
-    var cooc = 0L
-    var msd = Int.MaxValue
-    for (a <- hS; b <- tS) {
-      val d = math.abs(a - b)
-      if (d < msd) msd = d
-      if (d == 0) cooc += 1
-    }
-    (msd, cooc)
-  }
+  /** One entity of a document: qid, NER type and its sentence-id
+    * multiset, ascending (`docMentions` emits in sentence order). */
+  private[pipeline] final case class DocEnt(qid: String, tpe: String, sents: Array[Int])
 
-  private[pipeline] def evidenceOf(hSet: Set[Int], tSet: Set[Int]): Seq[Int] =
-    hSet.intersect(tSet).toSeq.sorted
-
-  /** Per-doc entity table from kernel mentions: insertion-ordered
-    * (qid → (nerType, sent-id multiset)) — the shared scaffolding of the
-    * fused scoring kernels (this one and `KnowledgeInjection
-    * .extractInjectedFused`); qid→type is functional so first-writer-wins
-    * is exact. */
+  /** Per-doc entity table from kernel mentions, in first-mention order —
+    * the shared scaffolding of the fused scoring kernels (this one and
+    * `KnowledgeInjection.extractInjectedFused`); qid→type is functional so
+    * first-writer-wins is exact. */
   private[pipeline] def docEntityTable(
       ments: scala.collection.mutable.ArrayBuffer[(Int, Int, Int, Stages.DictEntry)])
-      : Array[(String, (String, scala.collection.mutable.ArrayBuffer[Int]))] = {
-    val ents = scala.collection.mutable.LinkedHashMap
-      .empty[String, (String, scala.collection.mutable.ArrayBuffer[Int])]
+      : Array[DocEnt] = {
+    val ents = new java.util.LinkedHashMap[String, (String, ArrayBuilder.ofInt)]
     ments.foreach { m =>
-      ents.getOrElseUpdate(m._4._3,
-        (m._4._4, scala.collection.mutable.ArrayBuffer.empty[Int]))._2 += m._1
+      var e = ents.get(m._4._3)
+      if (e == null) { e = (m._4._4, new ArrayBuilder.ofInt); ents.put(m._4._3, e) }
+      e._2 += m._1
     }
-    ents.toArray
+    val out = new Array[DocEnt](ents.size)
+    var k = 0
+    ents.forEach { (q, e) => out(k) = DocEnt(q, e._1, e._2.result()); k += 1 }
+    out
+  }
+
+  // pairFeatures' per-pair statistics for both fused kernels: merge walks
+  // over two ascending `DocEnt.sents`, no boxing, tuple or set per pair.
+
+  /** Multiset co-occurrence count Σ_s c_h(s)·c_t(s) (`n_cooc`). */
+  private[pipeline] def coocCount(hS: Array[Int], tS: Array[Int]): Long = {
+    var n = 0L
+    var i = 0
+    var j = 0
+    while (i < hS.length && j < tS.length) {
+      if (hS(i) < tS(j)) i += 1
+      else if (hS(i) > tS(j)) j += 1
+      else { // this h copy meets every t copy of its sentence
+        var k = j
+        while (k < tS.length && tS(k) == hS(i)) k += 1
+        n += k - j
+        i += 1
+      }
+    }
+    n
+  }
+
+  /** Minimum |a − b| over the two multisets (`min_sent_dist`). */
+  private[pipeline] def minSentDist(hS: Array[Int], tS: Array[Int]): Int = {
+    var msd = Int.MaxValue
+    var i = 0
+    var j = 0
+    while (i < hS.length && j < tS.length && msd > 0) {
+      msd = math.min(msd, math.abs(hS(i) - tS(j)))
+      if (hS(i) < tS(j)) i += 1 else j += 1
+    }
+    msd
+  }
+
+  /** Sorted distinct co-occurring sentences (`evidence`). */
+  private[pipeline] def evidenceOf(hS: Array[Int], tS: Array[Int]): Seq[Int] = {
+    val out = new ArrayBuilder.ofInt
+    var last = -1 // sentence ids are ≥ 0
+    var i = 0
+    var j = 0
+    while (i < hS.length && j < tS.length) {
+      if (hS(i) < tS(j)) i += 1
+      else if (hS(i) > tS(j)) j += 1
+      else {
+        if (hS(i) != last) { last = hS(i); out += last }
+        i += 1
+        j += 1
+      }
+    }
+    scala.collection.immutable.ArraySeq.unsafeWrapArray(out.result())
   }
 
   case class PairFeature(doc_id: Long, h_qid: String, h_type: String,
@@ -243,58 +285,57 @@ object RelationScorer {
     }.toDF()
   }
 
-  /** ZERO-SHUFFLE scored extraction: pages → mentions → link → pair
-    * features → 96-class decode, all inside one mapPartitions pass per
-    * document (the scored twin of `Stages.extractTriplesKernel`). Every
-    * step is per-doc driver-free Scala over the same broadcast dictionary
-    * and compiled weights, so the job's only exchange is whatever the SINK
+  /** ZERO-SHUFFLE scored extraction — the one per-document rule kernel:
+    * pages → mentions → link → pair features → 96-class decode, all inside
+    * one mapPartitions pass per document (`Stages.extractTriplesKernel` is
+    * its (doc_id, subj, pred, obj) projection). Every step is per-doc
+    * driver-free Scala over the broadcast dictionary (`dict`, the Gazetteer
+    * by default; file-backed 63k-alias dictionaries ride the same way) and
+    * compiled weights, so the job's only exchange is whatever the SINK
     * needs. Only pairs that co-occur in a sentence (n_cooc ≥ 1) are scored.
     * FusedSpec pins it row-identical to `score` over `pairFeatures` (the
-    * relational feature path the eval queries use); q_scored_triples
-    * checks it against the oracle.
+    * relational feature path the eval queries use); q_scored_triples and
+    * q_triples check it against the oracle.
     *
-    * PRECONDITION (same as `Stages.extractTriplesKernel`): input pages must
-    * have UNIQUE doc_id. `pairFeatures` groups mentions ACROSS rows of a
-    * doc_id, so with duplicate rows it would merge their sentence lists
-    * while this kernel processes each row independently — silently
-    * different pairs. Callers that cannot guarantee uniqueness must dedup
-    * upstream (the runner's per-bucket overwrite does). */
-  def extractKernelFused(pages: DataFrame, spark: SparkSession): DataFrame = {
+    * PRECONDITION: input pages must have UNIQUE doc_id. Each row is scored
+    * on its own, so a duplicated doc_id emits every triple once per input
+    * row (FusedSpec pins that), and `pairFeatures`, which groups mentions
+    * ACROSS rows of a doc_id, would see different pairs. Callers that
+    * cannot guarantee uniqueness must dedup upstream or append .distinct()
+    * (the runner's one distinct before its sink does). */
+  def extractKernelFused(pages: DataFrame, spark: SparkSession,
+      dict: Map[String, Array[Stages.DictEntry]] = Stages.kernelDict): DataFrame = {
     import spark.implicits._
-    val byFirstB = spark.sparkContext.broadcast(Stages.kernelDict)
+    val byFirstB = spark.sparkContext.broadcast(dict)
     val bw = spark.sparkContext.broadcast(compile(fixtureWeights))
     pages.select(col("doc_id"), col("text")).as[(Long, String)]
       .mapPartitions { it =>
         val byFirst = byFirstB.value
         val w = bw.value
         it.flatMap { case (docId, text) =>
-          val ments = Stages.docMentions(text.split(" ", -1), byFirst)
-          val arr = docEntityTable(ments)
-          // per-entity sets hoisted out of the k² pair loop
-          val sentSets = arr.map(_._2._2.toSet)
+          val arr = docEntityTable(Stages.docMentions(text.split(" ", -1), byFirst))
           val out = scala.collection.mutable.ArrayBuffer.empty[ScoredTriple]
+          // each unordered pair once: its sentence statistics are symmetric,
+          // only the type pair (hence the decode) depends on direction
           var i = 0
           while (i < arr.length) {
-            val (hQid, (hType, hS)) = arr(i)
-            var j = 0
+            val a = arr(i)
+            var j = i + 1
             while (j < arr.length) {
-              if (i != j) {
-                val (tQid, (tType, tS)) = arr(j)
-                val (msd, cooc) = pairDistCooc(hS, tS)
-                if (cooc >= 1) {
-                  val tp = (hType, tType)
-                  val soft = w.wDist * disBucket(msd) + w.wCooc * math.log1p(cooc.toDouble)
-                  // candidate pre-gate (exact, same guard as decodeFast): a
-                  // type pair with no positive base decodes nothing below
-                  // the negative-base margin — skip the evidence allocation
-                  if (w.posIdx.getOrElse(tp, EmptyIdx).nonEmpty || soft >= w.negGuard) {
-                    // evidence only for pairs that can emit
-                    val ev = evidenceOf(sentSets(i), sentSets(j))
-                    val base = w.base.getOrElse(tp, w.default)
-                    decodeFast(w, tp, base, soft).foreach { case (r, s) =>
-                      out += ScoredTriple(docId, hQid, r, tQid, s, ev)
-                    }
-                  }
+              val b = arr(j)
+              val cooc = coocCount(a.sents, b.sents)
+              if (cooc >= 1) {
+                // a co-occurring pair's minimum sentence distance is 0
+                val soft = w.wDist * disBucket(0) + w.wCooc * math.log1p(cooc.toDouble)
+                def decodeDir(tp: (String, String)) =
+                  decodeFast(w, tp, w.base.getOrElse(tp, w.default), soft)
+                val ab = decodeDir((a.tpe, b.tpe))
+                val ba = decodeDir((b.tpe, a.tpe))
+                // evidence only for pairs that emit
+                if (ab.nonEmpty || ba.nonEmpty) {
+                  val ev = evidenceOf(a.sents, b.sents)
+                  ab.foreach { case (r, s) => out += ScoredTriple(docId, a.qid, r, b.qid, s, ev) }
+                  ba.foreach { case (r, s) => out += ScoredTriple(docId, b.qid, r, a.qid, s, ev) }
                 }
               }
               j += 1

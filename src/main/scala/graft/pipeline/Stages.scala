@@ -4,12 +4,13 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.kb.Gazetteer
 
-/** The triple-extraction stages. Mention detection (`mentionsKernel`) and
-  * the whole pages → triples rule path (`extractTriplesKernel`) are
-  * mapPartitions kernels: sentence split, phrase match, suppression, link
-  * and pair-gen in plain Scala over broadcast dictionaries, one pass per
-  * document. The DuckDB oracle (`SparkEntry.oracleSql`) is the
-  * independent second implementation of every step.
+/** The triple-extraction stages. Mention detection (`mentionsKernel`) is
+  * a mapPartitions kernel over a broadcast dictionary, one pass per
+  * document; the pages → triples rule path (`extractTriplesKernel`) is a
+  * projection of the one rule kernel, `RelationScorer.extractKernelFused`,
+  * which shares the matcher `docMentions`. The DuckDB oracle
+  * (`SparkEntry.oracleSql`) is the independent second implementation of
+  * every step.
   *
   * Scale notes (100 TB / 10^12 docs):
   *  - all per-document work stays inside one task — NO shuffle until a
@@ -30,15 +31,12 @@ object Stages {
   /** Entity linking (`ATLOP+KIRE/data/gen_kg_data.py:76-87,272-304`): the
     * per-doc vote is doc-independent (every mention of an alias carries the
     * same candidate set — see `resolveAliasEntries`), so linking is ONE
-    * broadcast hash join against the pre-resolved dictionary. The q_linked
-    * oracle replays the per-(doc, alias) relational vote independently. */
-  def linkedFast(mentions: DataFrame, spark: SparkSession): DataFrame =
-    linkedFastWith(mentions, spark, resolvedAliases)
-
-  /** `linkedFast` over an arbitrary resolved dictionary (file-backed
-    * reference-scale dictionaries). */
-  def linkedFastWith(mentions: DataFrame, spark: SparkSession,
-      resolved: Seq[(String, String, String)]): DataFrame = {
+    * broadcast hash join against the pre-resolved dictionary (`resolved`:
+    * the Gazetteer by default, or a file-backed reference-scale one). The
+    * q_linked oracle replays the per-(doc, alias) relational vote
+    * independently. */
+  def linkedFast(mentions: DataFrame, spark: SparkSession,
+      resolved: Seq[(String, String, String)] = resolvedAliases): DataFrame = {
     import spark.implicits._
     val dict = broadcast(resolved.toDF("alias", "qid", "ner_type"))
     mentions.join(dict, Seq("alias"))
@@ -228,15 +226,10 @@ object Stages {
     * document-partition with pre-broadcast dictionaries"): one row per
     * maximal match, (doc_id, sent_id, pos_start, pos_end, alias). One
     * dictionary deserialization per partition, rows streamed, no join and
-    * no shuffle (PipelineSpec pins the plan; q_mentions the rows). */
-  def mentionsKernel(pages: DataFrame, spark: SparkSession): DataFrame =
-    mentionsKernelWith(pages, spark, kernelDict)
-
-  /** Same kernel over an ARBITRARY broadcast dictionary — the path for
-    * file-backed reference-scale dictionaries (63k+ aliases ride as a
-    * broadcast variable, never a plan literal). */
-  def mentionsKernelWith(pages: DataFrame, spark: SparkSession,
-      dict: Map[String, Array[DictEntry]]): DataFrame = {
+    * no shuffle (PipelineSpec pins the plan; q_mentions the rows). `dict`
+    * may be a file-backed 63k+ alias one: a broadcast, never a literal. */
+  def mentionsKernel(pages: DataFrame, spark: SparkSession,
+      dict: Map[String, Array[DictEntry]] = kernelDict): DataFrame = {
     import spark.implicits._
     val byFirstB = spark.sparkContext.broadcast(dict)
     pages.select(col("doc_id"), col("text")).as[(Long, String)]
@@ -250,50 +243,15 @@ object Stages {
       .toDF("doc_id", "sent_id", "pos_start", "pos_end", "alias")
   }
 
-  /** Pages → triples in one mapPartitions pass: sentence split, phrase
-    * match, suppression, link, pair-gen and rule classification in plain
-    * Scala over broadcast dictionaries — no join and no shuffle at all
-    * (PipelineSpec pins the plan; q_triples and q_triples_kernel the rows).
-    *
-    * PRECONDITION: input pages must have UNIQUE doc_id — the per-doc
-    * LinkedHashSet dedup below makes the output globally distinct only
-    * because doc_id is part of the key. With duplicate doc_id rows
-    * (re-ingested doc, replayed partition) this kernel emits every triple
-    * once per input row; FusedSpec pins that behaviour explicitly. Callers
-    * that cannot guarantee uniqueness must dedup upstream or append
-    * .distinct() (the runner's one distinct before its sink does). */
-  def extractTriplesKernel(pages: DataFrame, spark: SparkSession): DataFrame =
-    extractTriplesKernelWith(pages, spark, kernelDict)
-
-  /** Same kernel over an arbitrary broadcast dictionary (the 63k
-    * file-backed case: ~6 MB of broadcast, identical zero-shuffle shape). */
-  def extractTriplesKernelWith(pages: DataFrame, spark: SparkSession,
-      dict: Map[String, Array[DictEntry]]): DataFrame = {
-    import spark.implicits._
-    val byFirstB = spark.sparkContext.broadcast(dict)
-    val rulesB = spark.sparkContext.broadcast(
-      Gazetteer.relRules.map(r => (r._1, r._2) -> r._3).toMap)
-    pages.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        val byFirst = byFirstB.value
-        val rules = rulesB.value
-        it.flatMap { case (docId, text) =>
-          val ments = docMentions(text.split(" ", -1), byFirst)
-          // per-doc LinkedHashSet dedup makes the output globally distinct
-          // (doc_id is part of the key) — NO downstream distinct/shuffle
-          val out = scala.collection.mutable.LinkedHashSet.empty[(String, String, String)]
-          ments.groupBy(_._1).foreach { case (_, ms) =>
-            val ents = ms.map(m => (m._4._3, m._4._4)).distinct
-            ents.foreach { h =>
-              ents.foreach { t =>
-                if (h._1 != t._1)
-                  rules.get((h._2, t._2)).foreach(pred => out += ((h._1, pred, t._1)))
-              }
-            }
-          }
-          out.iterator.map { case (s, pr, o) => (docId, s, pr, o) }
-        }
-      }
-      .toDF("doc_id", "subj", "pred", "obj")
-  }
+  /** Pages → rule triples: the (doc_id, subj, pred, obj) projection of the
+    * one per-document rule kernel, `RelationScorer.extractKernelFused`,
+    * whose fixture-weight decode reproduces `Gazetteer.relRules` exactly —
+    * no join, no shuffle (PipelineSpec pins the plan, q_triples the rows).
+    * PRECONDITION (the kernel's): UNIQUE doc_id. A duplicated doc_id row
+    * emits its triples once more (FusedSpec pins it); such callers dedup
+    * upstream or append .distinct(), as the runner's sink does. */
+  def extractTriplesKernel(pages: DataFrame, spark: SparkSession,
+      dict: Map[String, Array[DictEntry]] = kernelDict): DataFrame =
+    RelationScorer.extractKernelFused(pages, spark, dict)
+      .select("doc_id", "subj", "pred", "obj")
 }

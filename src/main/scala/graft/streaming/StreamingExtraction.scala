@@ -17,13 +17,15 @@ import graft.sources.Pages
   *   readStream(pages) → mapPartitions extraction kernel → first-seen upsert
   *
   * Scale design:
-  *  - The extraction kernel (`Stages.extractTriplesKernel`) is a stateless
-  *    per-partition transform, so it lifts onto the stream UNCHANGED — same
-  *    broadcast dictionaries, same per-doc dedup, zero shuffle per batch.
+  *  - The extraction kernel (`Stages.extractTriplesKernel`, the
+  *    projection of the runner's `RelationScorer.extractKernelFused`) is a
+  *    stateless per-partition transform, so the stream runs the batch
+  *    kernel as is — same broadcast dictionaries, zero shuffle per batch.
   *    Stream rows are pinned identical to the batch kernel in StreamingSpec.
   *  - Doc-level triples (doc_id in the key) need NO cross-batch state: the
-  *    kernel's per-doc dedup plus unique doc_id (the kernel's documented
-  *    precondition) already make output globally distinct.
+  *    kernel emits each (pair, relation) once per document, so with unique
+  *    doc_id (the kernel's documented precondition) the output is already
+  *    globally distinct.
   *  - KB-level triples (doc_id dropped) DO need cross-batch state — the same
   *    (subj, pred, obj) re-extracted from a later crawl batch must not be
   *    re-emitted. `netNewTriples` keeps one boolean state entry per distinct

@@ -85,7 +85,7 @@ class DictFilesSpec extends AnyFunSuite {
     assert(resolved == Stages.resolvedAliases,
       "file-ingested Gazetteer must resolve identically to the constants")
     val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001")
-    val a = Stages.extractTriplesKernelWith(pages, spark,
+    val a = Stages.extractTriplesKernel(pages, spark,
       Stages.kernelDictFrom(resolved))
     val b = Stages.extractTriplesKernel(pages, spark)
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
@@ -98,8 +98,8 @@ class DictFilesSpec extends AnyFunSuite {
         SyntheticDict.tsvPath, SyntheticDict.nt3Path),
       Gazetteer.entityTypes.toMap)
     val pages = Pages.fromDocuments(spark, "/root/testdata/sf0.001")
-    val linked = Stages.linkedFastWith(
-      Stages.mentionsKernelWith(pages, spark, Stages.kernelDictFrom(resolved)),
+    val linked = Stages.linkedFast(
+      Stages.mentionsKernel(pages, spark, Stages.kernelDictFrom(resolved)),
       spark, resolved).cache()
     // live-bigram entities actually match documents
     assert(linked.filter(col("qid").startsWith("Q91")).count() > 0,

@@ -23,7 +23,9 @@ class FusedSpec extends AnyFunSuite {
       (1L, "spark uses sort merge join. customer likes merge join order."),
       (2L, "hash. join table scan batch"),
       // "hash" ends chunk 0 (pos 15), "join" opens chunk 1: no pair
-      (3L, (0 until 40).map(i => if (i == 15) "hash" else if (i == 16) "join" else "x").mkString(" ")))
+      (3L, (0 until 40).map(i => if (i == 15) "hash" else if (i == 16) "join" else "x").mkString(" ")),
+      // spark (Q1) in sentences {0, 0, 2}, merge (Q3) in {0, 1, 2}
+      (4L, "spark meets spark at merge now. merge stays. spark and merge end"))
       .toDF("doc_id", "text")
     // "join." and "order." carry the period, so they match no alias
     assert(tripleSet(Stages.extractTriplesKernel(tricky, spark)) == Set(
@@ -31,7 +33,18 @@ class FusedSpec extends AnyFunSuite {
       (1L, "Q14", "P361", "Q1"), (1L, "Q14", "P361", "Q3"),
       (1L, "Q3", "P361", "Q1"), (1L, "Q3", "P361", "Q14"),
       (1L, "Q4", "P800", "Q32"),
-      (2L, "Q10", "P127", "Q15"), (2L, "Q33", "P1441", "Q10")))
+      (2L, "Q10", "P127", "Q15"), (2L, "Q33", "P1441", "Q10"),
+      (4L, "Q1", "P361", "Q3"), (4L, "Q3", "P361", "Q1")))
+    // the scored kernel's pair arithmetic on doc 4: n_cooc is the multiset
+    // count c_h·c_t summed per shared sentence (2·1 + 1·1 = 3), the minimum
+    // sentence distance is 0, and evidence is the sorted distinct shared
+    // sentences — score = +2 rule base + 0.1·log1p(3) ≈ 2.1386
+    val pair = RelationScorer.extractKernelFused(tricky, spark)
+      .filter(col("doc_id") === 4L && col("subj") === "Q1" && col("obj") === "Q3")
+      .collect()
+    assert(pair.length == 1 && pair.head.getAs[String]("pred") == "P361")
+    assert(pair.head.getAs[Double]("score") == 2.0 + 0.1 * math.log1p(3.0))
+    assert(pair.head.getAs[collection.Seq[Int]]("evidence") == Seq(0, 2))
   }
 
   test("duplicate doc_id input: the kernel emits every triple once per input row") {
